@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Benchmark main (driver contract): runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -33,21 +33,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Single-shot timings at sf0.1 are dominated by per-plan fixed cost
-    // (codegen/JIT + task scheduling), so a small local parallelism wins
-    // here (measured: 4 threads ≈ 51s, 32 threads ≈ 65s for the same 66
-    // queries). Real-scale parallelism comes from executors × shuffle
-    // partitions on content-derived keys, not from this local setting.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     // warmup (untimed): touch every table once so file listing warms
     // (events via the loader — its ns timestamps need normalizing),
@@ -113,11 +99,10 @@ object Bench {
       val verdict = if (median > 2 * floors(name)) "regression" else "noise"
       (name, driverSec, floors(name), reps, median, verdict)
     }
-    def d2t(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val triageJson =
       if (floors.isEmpty) "\"no floors file\""
       else triage.map { case (n, run, fl, reps, med, v) =>
-        s""""$n":{"run":${d2t(run)},"floor":${d2t(fl)},"reps":[${reps.map(d2t).mkString(",")}],"median":${d2t(med)},"verdict":"$v"}"""
+        s""""$n":{"run":${d2(run)},"floor":${d2(fl)},"reps":[${reps.map(d2).mkString(",")}],"median":${d2(med)},"verdict":"$v"}"""
       }.mkString("{", ",", "}")
     val regressions = triage.filter(_._6 == "regression").map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
@@ -129,9 +114,11 @@ object Bench {
     // reader acts on), capped so the line stays well under the ~2.5 KB
     // tail window; the COMPLETE per-query map goes to BENCH_SELF.json.
     val top = results.sortBy(-_._2).take(20).sortBy(_._1)
-    val line = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(top)},"n_queries":${results.size},"errors":$errs,"triage_n":${triage.size},"triage_regressions":$regressions,"sf":"$sfDir","full":"BENCH_SELF.json"}"""
+    // the run's sizing, so runs at different settings are told apart
+    val config = s""""cpus":${Session.cpus},"shuffle_partitions":${Session.parts},"stream_parts":${Session.streamParts}"""
+    val line = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(top)},"n_queries":${results.size},"errors":$errs,"triage_n":${triage.size},"triage_regressions":$regressions,"sf":"$sfDir",$config,"full":"BENCH_SELF.json"}"""
     println(line)
-    val full = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(results)},"errors":$errs,"triage":$triageJson,"triage_regressions":$regressions,"triage_skipped":$triageSkipped,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(results)},"errors":$errs,"triage":$triageJson,"triage_regressions":$regressions,"triage_skipped":$triageSkipped,"sf":"$sfDir",$config}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_SELF.json"), full + "\n")
     catch { case _: Throwable => () }

@@ -2,48 +2,46 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single-query timing under Bench conditions (same session config and
-  * warmup), for iterating on one query's plan without a full bench
-  * run: `runMain graft.TimeOne <query> [reps] [sfDir]`.
+/** Query timing under Bench conditions (same `Session`, same warmup),
+  * for iterating on a few queries' plans without a full bench run:
+  * `runMain graft.TimeOne <q1[,q2,...]> [reps] [sfDir]` prints every
+  * rep and the median per query.
   *
-  * The warmup mirrors Bench's EXACTLY — tables plus the same 8-query
-  * JIT pass (r15: it used to warm only tables, so the first rep of any
-  * streaming query carried the ~3 s micro-batch-runtime JIT that
-  * Bench's st2 warmup hoists — st9's "9.3 s first run" in the r14
-  * triage was exactly this gap, not a per-query cost; with the warmup
-  * aligned, rep1 is comparable to a driver-bench measurement). Set
-  * SPARK_GRAFT_NOWARM=1 to skip the query warmup for quick plan
-  * iteration where absolute floors don't matter. */
+  * The warmup is `Bench.warmup` — tables plus the same 8-query JIT
+  * pass (r15: warming only tables left the ~3 s micro-batch-runtime
+  * JIT inside the first rep of any streaming query, st9's "9.3 s first
+  * run" in the r14 triage; with the warmup shared, rep1 is comparable
+  * to a Bench measurement). Set SPARK_GRAFT_NOWARM=1 to skip the
+  * query warmup for quick plan iteration where absolute floors don't
+  * matter. */
 object TimeOne {
+  /** Runs `query` over `sfDir` `reps` times through the full physical
+    * plan (`Exec.runCount`), printing each rep and the median; returns
+    * the median seconds. `tag` labels the lines (e.g. a scale). */
+  def time(spark: SparkSession, query: String, reps: Int, sfDir: String,
+           tag: String = ""): Double = {
+    val label = if (tag.isEmpty) query else s"$query $tag"
+    val secs = (1 to reps).map { i =>
+      val t0 = System.nanoTime()
+      val n = graft.core.Exec.runCount(SparkEntry.queries(query)(spark, sfDir))
+      val s = (System.nanoTime() - t0) / 1e9
+      println(f"[timeone] $label rep$i: $s%.2f s ($n rows)")
+      spark.catalog.clearCache(); System.gc()
+      s
+    }
+    val median = secs.sorted.apply(reps / 2)
+    println(f"[timeone] $label median: $median%.2f s")
+    median
+  }
+
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val queries = args(0).split(',').toSeq
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // ×1000-corpus timing needs shuffle partitions scaled past the
-    // core count (the r11 ScaleDecade lesson) — same override knob.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Bench.warmup is THE shared definition (r16, advice #3): the
-    // warmup sequence used to be a duplicated literal here and in
-    // Bench — an independent edit would have silently broken rep1
-    // comparability.
+    val spark = graft.core.Session.local()
     Bench.warmup(spark, sfDir,
       queries = !sys.env.get("SPARK_GRAFT_NOWARM").contains("1"))
-    (1 to reps).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = graft.core.Exec.runCount(SparkEntry.queries(name)(spark, sfDir))
-      println(f"[timeone] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      spark.catalog.clearCache(); System.gc()
-    }
+    queries.foreach(time(spark, _, reps, sfDir))
     spark.stop()
   }
 }

@@ -29,10 +29,10 @@ object Tables {
     * so the NTZ→LTZ cast is identity on the stored micros and both
     * engines see identical instants either way. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // Session-level conf mutation at plan-build time: benign in the
-    // single-tenant drivers here (Verify/Bench also set it at session
-    // build), but racy if a shared session plans other queries
-    // concurrently — a multi-tenant caller should set it once at
+    // Session-level conf mutation at plan-build time: a no-op for
+    // sessions from core.Session (which sets it at build), kept for
+    // callers that build their own; racy if a shared session plans
+    // other queries concurrently — such a caller should set it once at
     // session construction instead.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(load(spark, dir, "events"))

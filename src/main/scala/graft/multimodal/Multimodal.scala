@@ -580,7 +580,7 @@ object Multimodal {
   }
 
   /** m6's pair machinery, shared with the recall/density audits
-    * (M6RecallSpec, M6Density): 3-band pigeonhole over the 16-bit
+    * (M6RecallSpec; the r12 density ladder in BASELINE.md): 3-band pigeonhole over the 16-bit
     * aHash (6/5/5 bits — any hamming≤2 pair keeps ≥1 band intact) with
     * the d31 bucket-population sub-cell salt: a (band, value) bucket of
     * population bc splits into ceil(bc/128) md5-keyed sub-cells, so

@@ -1058,8 +1058,8 @@ object Advanced {
         // localCheckpoint before the orderBy (r17): the fits sit in the
         // stage that FEEDS the sort's range exchange, and that stage
         // runs TWICE — once for the RangePartitioner's sampling pass,
-        // once for the real shuffle write (ProbeT13m: two 4-task
-        // ~1.5 s stages per run). Checkpointing the 8-row fit output
+        // once for the real shuffle write (measured r17: two 4-task
+        // ~1.5 s stages per run, OPTIMIZATION_r17.md §4b). Checkpointing the 8-row fit output
         // makes the fits run once; the sort then samples 8
         // materialized rows. Paid inside the timed region.
         .localCheckpoint()
@@ -1339,8 +1339,9 @@ object Advanced {
       val hashes = graft.multimodal.Multimodal.aHashes(media).localCheckpoint()
       // banding + sub-cell salt + per-image best match: the shared
       // kernel (Multimodal.phashBestMatch) — also driven standalone by
-      // M6RecallSpec (salt recall loss vs all-pairs truth) and
-      // M6Density (the O(n) candidate bound past hash-space saturation)
+      // M6RecallSpec (salt recall loss vs all-pairs truth) and the r12
+      // density ladder in BASELINE.md (the O(n) candidate bound past
+      // hash-space saturation)
       graft.multimodal.Multimodal.phashBestMatch(hashes)
         .orderBy("media_id")
     }),

@@ -1,10 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
 
 /** r17 (verdict #2): d4b's post-multiprobe floor is Σ bucket² on the
   * 16-bit half-value join key. The promised safety valve for a
@@ -12,7 +9,8 @@ import org.apache.spark.sql.functions._
   * because the candidate stage is a plain equi-join (no collect_list
   * arrays, the r13 design note). This spec demonstrates it end to end:
   * a deliberately skewed synthetic simhash corpus (one half value
-  * shared by 25% of docs), run through the exact d4b candidate join at
+  * shared by 25% of docs), run through the shipped d4b candidate join
+  * (TextQueries.simhashPairs, which the declared query calls) at
   * test-scale skew thresholds, must (a) SPLIT the hot partition — the
   * finalized plan carries an AQEShuffleRead with PartialReducer
   * (skew-split) partitions — and (b) produce the identical pair set
@@ -27,49 +25,6 @@ import org.apache.spark.sql.functions._
   * proof. Documented in OPTIMIZATION_r17.md.
   */
 class D4bSkewSpec extends SparkSpec {
-
-  /** The d4b candidate pipeline downstream of the (doc_id, simhash)
-    * frame — replicated verbatim from TextQueries d4b_simhash_pairs so
-    * the experiment exercises the shipped join shape. */
-  private def d4bPairs(sh: DataFrame): DataFrame = {
-    val halves = sh.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 2).map(b => struct(lit(b).as("half"),
-        expr(s"(simhash div ${1L << (16 * b)}) % 65536").as("hv"))): _*)).as("hb"))
-      .select(col("doc_id"), col("simhash"),
-        col("hb.half").as("half"), col("hb.hv").as("hv"))
-    val probes = halves.select(col("doc_id"), col("simhash"), col("half"),
-      explode(concat(array(col("hv")),
-        array((0 until 16).map(i => expr(s"hv ^ ${1L << i}")): _*))).as("pv"))
-    val rhs = halves.select(col("half").as("half2"), col("hv").as("hv2"),
-      col("doc_id").as("b_id"), col("simhash").as("sh2"))
-    probes.join(rhs,
-        col("half") === col("half2") && col("pv") === col("hv2") &&
-        col("doc_id") < col("b_id"))
-      .withColumn("hamming", expr("bit_count(simhash ^ sh2)"))
-      .filter(col("hamming") <= 3)
-      .select(col("doc_id").as("a_id"), col("b_id"),
-        col("hamming").cast("long").as("hamming"))
-      .distinct()
-  }
-
-  private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val here = p match {
-      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)(pf)
-      case q: QueryStageExec => collectAll(q.plan)(pf)
-      case r: ReusedExchangeExec => collectAll(r.child)(pf)
-      case _ => p.children.flatMap(c => collectAll(c)(pf))
-    }
-    (pf.lift(p).toSeq ++ here) ++ p.subqueries.flatMap(s => collectAll(s)(pf))
-  }
-
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("hot simhash bucket: AQE splits the skewed candidate-join partition; results unchanged") {
     // 16k synthetic docs; the first 4k share the lower half 0x1234 (one
@@ -109,7 +64,7 @@ class D4bSkewSpec extends SparkSpec {
 
     val (setOn, skewReads, planStr) = withConf(
       common :+ ("spark.sql.adaptive.skewJoin.enabled" -> "true"): _*) {
-      val df = d4bPairs(sh)
+      val df = graft.queries.TextQueries.simhashPairs(sh)
       val s = resultSet(df)
       val reads = collectAll(df.queryExecution.executedPlan) {
         case r: AQEShuffleReadExec if r.hasSkewedPartition => r
@@ -122,7 +77,7 @@ class D4bSkewSpec extends SparkSpec {
 
     val setOff = withConf(
       common :+ ("spark.sql.adaptive.skewJoin.enabled" -> "false"): _*) {
-      resultSet(d4bPairs(sh))
+      resultSet(graft.queries.TextQueries.simhashPairs(sh))
     }
     assert(setOn === setOff,
       s"skew-split changed the pair set: on=${setOn.size} off=${setOff.size}, " +

@@ -3,28 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** r13 verdict #3 — the default-ON disc-break scan's cost AT CORPUS
-  * SCALE, measured (NOT part of `sbt test` — run it manually like
-  * ScaleDecade). t3b/t3c run the detrend kernels on a fixed 4 000-row
-  * sim, so their r13 floor moves (0.50→1.18 s / 0.28→0.41 s) are
-  * fixed plan/codegen cost and say nothing about the corpus term; the
-  * at-scale defense — "withRegionDisc is one extra window pass
-  * sharing the existing series-key exchange" — was an argument. This
-  * runner detrends a corpus-PROPORTIONAL series (the ScaleFixture
+/** The disc-break detrend at corpus scale (r13 verdict #3), used by
+  * ScaleSweepSpec (d): a corpus-PROPORTIONAL series (the ScaleFixture
   * events table: user-keyed, rows ∝ mult, ~26 s pairs every ~11 h, so
-  * a 24 h gap keeps one region per user) with discBreaks ON vs OFF at
-  * each multiplier and prints both walls plus the on/off ratio; the
-  * ratio should FALL toward the marginal cost of the extra window
-  * chain as the corpus term swamps the fixed cost. GP mode: its
-  * Kalman/RTS kernel is O(n) per region, so the kernel term itself
-  * scales linearly and cannot mask a super-linear scan.
+  * a 24 h gap keeps one region per user) detrended in GP mode with
+  * discBreaks on or off. The on/off ratio should FALL toward the
+  * marginal cost of the extra window as the corpus term swamps the
+  * fixed cost; the GP Kalman/RTS kernel is O(n) per region, so it
+  * cannot mask a super-linear scan. The 1×/10×/100× ladder the
+  * standalone runner measured is in BASELINE.md §scale (the runner is
+  * in git at 2f4e032).
   *
   * Values are scaled to flux-like ~1.0 (events `value`/200) so the
   * 1e6-quantized break statistics sit deep inside the int64 envelope
-  * TsOps.withRegionDisc now enforces.
-  *
-  * Run: `SPARK_DRIVER_MEM=24g sbt "Test/runMain graft.DetrendDiscDecade [ms]"`
-  * (default ms = 1,10,100). Numbers recorded in BASELINE.md §scale.
+  * TsOps.withRegionDisc enforces.
   */
 object DetrendDiscDecade {
   def series(spark: SparkSession, d: String): DataFrame =
@@ -42,35 +34,5 @@ object DetrendDiscDecade {
       mode = "GaussianProcess", timescaleDays = 2.0,
       discBreaks = discBreaks).queryExecution.toRdd.count()
     (n, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val ms = args.headOption.map(_.split(",").map(_.toInt).toSeq)
-      .getOrElse(Seq(1, 10, 100))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // warmup: one small pass per arm so JIT/codegen of the window +
-    // kernel infrastructure lands outside the timed section
-    val w = ScaleFixture.dir(spark, 1)
-    run(spark, w, discBreaks = true); run(spark, w, discBreaks = false)
-    for (m <- ms) {
-      val d = ScaleFixture.dir(spark, m)
-      val (n1, tOn) = run(spark, d, discBreaks = true)
-      val (n0, tOff) = run(spark, d, discBreaks = false)
-      // Predef.printf, not functions.printf (the wildcard import shadows)
-      Predef.printf("[discdecade] x%-4d rows %9d  discOn %7.2f s  discOff %7.2f s  on/off x%4.2f%n",
-        m, n1, tOn, tOff, tOn / tOff)
-      assert(n1 == n0, s"row counts differ on/off: $n1 vs $n0")
-      spark.catalog.clearCache(); System.gc()
-    }
-    spark.stop()
   }
 }

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Structural gate for the default-ON disc-break scan (r14 verdict
-  * task #6, lifting DiscPlanCheck's manual counts into `sbt test`):
-  * the at-scale defense is "extra window EXPRESSIONS, not extra plan
+  * task #6): the at-scale defense is "extra window EXPRESSIONS, not extra plan
   * passes" — discBreaks=on may add at most ONE WindowExec over the
   * off plan and must share its exchanges and sorts exactly. A
   * regression back to the withColumn-per-stat chain (8 WindowExecs,
@@ -28,19 +28,15 @@ class DiscPlanSpec extends SparkSpec {
       "value", "err", gapUs = 86400000000L, mode = "GaussianProcess",
       timescaleDays = 2.0, discBreaks = disc)
     val plan = df.queryExecution.executedPlan
-    def cnt(p: SparkPlan, f: SparkPlan => Boolean): Int =
-      (if (f(p)) 1 else 0) + p.children.map(cnt(_, f)).sum
-    (cnt(plan, _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),
-     cnt(plan, _.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
-     cnt(plan, _.isInstanceOf[org.apache.spark.sql.execution.SortExec]))
+    (collectAll(plan) { case e: ShuffleExchangeExec => e }.size,
+     collectAll(plan) { case w: WindowExec => w }.size,
+     collectAll(plan) { case s: SortExec => s }.size)
   }
 
   test("disc-break scan adds <=1 WindowExec and ZERO exchanges/sorts") {
     // structural audit wants the raw plan, not an AQE wrapper whose
     // children materialize lazily — disable adaptive for this spec
-    val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val (exOn, winOn, sortOn) = counts(disc = true)
       val (exOff, winOff, sortOff) = counts(disc = false)
       info(s"disc=on  shuffles=$exOn windowExecs=$winOn sorts=$sortOn")
@@ -49,6 +45,6 @@ class DiscPlanSpec extends SparkSpec {
         s"disc-break scan regressed to a window CHAIN: $winOn vs $winOff+1 WindowExecs")
       assert(exOn === exOff, s"disc-break scan added a shuffle: $exOn vs $exOff")
       assert(sortOn === sortOff, s"disc-break scan added a sort: $sortOn vs $sortOff")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
+    }
   }
 }

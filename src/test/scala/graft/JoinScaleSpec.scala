@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.SparkPlan
@@ -19,18 +18,6 @@ class JoinScaleSpec extends SparkSpec {
     // plan the assertions inspect
     df.collect()
     df.queryExecution.executedPlan
-  }
-
-  private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    // QueryStageExec is a LeafExecNode — the finalized stage tree is
-    // reachable only through .plan (and ReusedExchange through .child)
-    val here = p match {
-      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)(pf)
-      case q: QueryStageExec => collectAll(q.plan)(pf)
-      case r: ReusedExchangeExec => collectAll(r.child)(pf)
-      case _ => p.children.flatMap(c => collectAll(c)(pf))
-    }
-    (pf.lift(p).toSeq ++ here) ++ (p.subqueries.flatMap(s => collectAll(s)(pf)))
   }
 
   test("b1: sort-merge join over bucketed tables has no Exchange on either side") {
@@ -148,17 +135,8 @@ class JoinScaleSpec extends SparkSpec {
     val plan = executed("j10_fuzzy_ed1")
     val shjs = collectAll(plan) { case j: ShuffledHashJoinExec => j }
     assert(shjs.nonEmpty, s"expected a ShuffledHashJoin in\n$plan")
-    // collectAll walks THROUGH ReusedExchangeExec nodes, so count reuse
-    // markers directly on the raw tree walk instead
-    def rawCollect(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(rawCollect)
-    }
-    val reused = rawCollect(plan).collect { case r: ReusedExchangeExec => r }
+    // collectAll matches a ReusedExchangeExec before walking through it
+    val reused = collectAll(plan) { case r: ReusedExchangeExec => r }
     assert(reused.nonEmpty,
       s"expected the variant subtree's Exchange to be reused (one explode, not two):\n$plan")
   }

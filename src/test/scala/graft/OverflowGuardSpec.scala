@@ -93,15 +93,13 @@ class OverflowGuardSpec extends SparkSpec {
     // legacy wrap semantics: the window sums silently wrap, so ONLY
     // the envelope stands between the 20σ threshold and garbage —
     // Σ ≤ max²·n guarantees the bound trips on every genuine wrap
-    val prior = spark.conf.get("spark.sql.ansi.enabled", "true")
-    try {
-      spark.conf.set("spark.sql.ansi.enabled", "false")
+    withConf("spark.sql.ansi.enabled" -> "false") {
       val alt = series(100, i => if (i % 2 == 0) 1000000000L else -1000000000L)
       val msg = raiseMsg(disc(alt))
       assert(msg.isDefined, "the envelope must raise where ANSI would have wrapped")
       assert(msg.get.contains("withRegionDisc int64 overflow envelope exceeded"),
         s"wanted the diagnostic envelope under legacy semantics, got: ${msg.get}")
-    } finally spark.conf.set("spark.sql.ansi.enabled", prior)
+    }
   }
 
   test("flux-like design point passes with the guard in the plan") {

@@ -1,38 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** One-off two-decade scale sweep (NOT part of `sbt test` — run it
-  * manually): times the heavy corpus queries on the 1×/10×/100×
-  * ScaleFixture corpora (5 k → 500 k docs, 100 k → 10 M events,
-  * 600 k → 60 M lineitem rows) under the driver bench config
-  * (local[32], 32 shuffle partitions — the SAME config at every size,
-  * so the ratios are internally consistent). ScaleSweepSpec asserts
-  * the 1×→10× decade on every `sbt test`; this runner extends the
-  * measurement one more decade where a spec would cost too much suite
-  * time. Numbers are recorded in BASELINE.md §scale.
+/** Scale ladder for the heavy queries (NOT part of `sbt test` — run it
+  * manually): builds the 1×/10×/100× ScaleFixture corpora (5 k → 500 k
+  * docs, 100 k → 10 M events, 600 k → 60 M lineitem rows) and times
+  * each heavy query on each through `TimeOne.time`, under one
+  * `Session` config at every size so the ratios are internally
+  * consistent. ScaleSweepSpec asserts the 1×→10× decade on every
+  * `sbt test`; this runner extends the measurement one more decade
+  * where a spec would cost too much suite time. Numbers are recorded
+  * in BASELINE.md §scale, measured at SPARK_GRAFT_CPUS=32; the ×1000
+  * column also scaled SPARK_GRAFT_PARTS (recorded per table there).
   *
-  * Run: `SPARK_DRIVER_MEM=24g sbt "Test/runMain graft.ScaleDecade"`
+  * Run: `SPARK_DRIVER_MEM=24g sbt "Test/runMain graft.ScaleDecade [mults] [queries]"`
+  * (comma-separated; defaults 1,10,100 and the full heavy list).
   */
 object ScaleDecade {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // r11: the ×1000 corpus (600 M lineitem / 100 M events / 5 M
-    // docs) exceeds single-node EXECUTION memory at 32 partitions —
-    // per-task hash state must shrink, i.e. partitions must scale
-    // with the data, which is exactly the knob a cluster deployment
-    // scales. SPARK_GRAFT_PARTS overrides for the ×1000 column
-    // (recorded per-table in BASELINE.md); the ×1/×10/×100 ladder
-    // stays at the same-config default.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
     val mults = args.headOption.map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(1, 10, 100))
     val dirs = mults.map(m => m -> ScaleFixture.dir(spark, m)).toMap
@@ -95,16 +79,8 @@ object ScaleDecade {
     // optional 2nd arg: comma-separated subset (re-measure selectively)
     val queries = args.lift(1).map(_.split(",").toSeq.filter(all.contains))
       .getOrElse(all)
-    // JIT warmup outside the timed section (Bench rationale)
-    Seq("d1_exact_dedup", "d4_simhash").foreach(q =>
-      graft.core.Exec.runCount(SparkEntry.queries(q)(spark, dirs(mults.head))))
-    for (q <- queries; m <- mults) {
-      val t0 = System.nanoTime()
-      val n = graft.core.Exec.runCount(SparkEntry.queries(q)(spark, dirs(m)))
-      printf("[decade] %-22s x%-3d rows %9d  %7.2f s%n",
-        q, m, n, (System.nanoTime() - t0) / 1e9)
-      spark.catalog.clearCache(); System.gc()
-    }
+    Bench.warmup(spark, dirs(mults.head))
+    for (q <- queries; m <- mults) TimeOne.time(spark, q, 1, dirs(m), s"x$m")
     spark.stop()
   }
 }

@@ -786,14 +786,18 @@ def d28(sf_dir, out_dir, chunks=16):
     con.execute("DROP TABLE IF EXISTS dbf_mat")
     v_total = 0
     for s_ in range(chunks):
+        # an empty hash slice has no partial files; read_parquet([])
+        # errors, and the slice's aggregate is empty anyway
         files = glob.glob(f"{dump}/cab/chunk*/slice={s_}/*.parquet")
-        con.execute(f"COPY (SELECT a, b, CAST(sum(p_ab) AS BIGINT) AS c_ab"
-                    f" FROM read_parquet({files!r}) GROUP BY 1, 2)"
-                    f" TO '{dump}/cab_s{s_}.parquet' (FORMAT parquet)")
+        if files:
+            con.execute(f"COPY (SELECT a, b, CAST(sum(p_ab) AS BIGINT) AS c_ab"
+                        f" FROM read_parquet({files!r}) GROUP BY 1, 2)"
+                        f" TO '{dump}/cab_s{s_}.parquet' (FORMAT parquet)")
         files = glob.glob(f"{dump}/cua/chunk*/slice={s_}/*.parquet")
-        con.execute(f"COPY (SELECT a, CAST(sum(p_a) AS BIGINT) AS c_a"
-                    f" FROM read_parquet({files!r}) GROUP BY 1)"
-                    f" TO '{dump}/cua_s{s_}.parquet' (FORMAT parquet)")
+        if files:
+            con.execute(f"COPY (SELECT a, CAST(sum(p_a) AS BIGINT) AS c_a"
+                        f" FROM read_parquet({files!r}) GROUP BY 1)"
+                        f" TO '{dump}/cua_s{s_}.parquet' (FORMAT parquet)")
         files = glob.glob(f"{dump}/tok/chunk*/slice={s_}/*.parquet")
         if files:
             v_total += con.execute(
@@ -895,8 +899,8 @@ def d4b(sf_dir, out_dir, chunks=16, refine=False):
     # corpus, so a re-run (e.g. after tuning the pair stage) skips it.
     # Keyed on the fixture's _manifest token (falling back to the
     # corpus dir mtime) in addition to the path, mirroring the
-    # M6Density fix (r14 advice): a regenerated fixture at the same
-    # path must NOT silently reuse stale simhashes.
+    # r14-advice fix to the m6 density runner: a regenerated fixture at
+    # the same path must NOT silently reuse stale simhashes.
     # r16 (advice #4): key on a SHORT DIGEST of the manifest contents —
     # embedding the raw token produced broken/over-length /tmp paths
     # for whitespace- or newline-bearing manifests. The mtime fallback

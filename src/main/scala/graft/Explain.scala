@@ -33,7 +33,7 @@ object Explain {
       "d12_bm25" -> "final top-20 is TakeOrderedAndProject (per-partition heaps) — no Exchange SinglePartition, no global sort of the scored corpus; the rank window sees only the 20 survivors",
       "d13_chunking" -> "row-local split + sequence explode + slice — no shuffle before the output sort",
       "d14_unigram_lm" -> "per-token logprobs integerized before the per-doc sum; two keyed aggregations + broadcast scalar",
-      "t13b_mcmc_perener" -> "one exact-integer phase-bin aggregation, then mapGroups runs one ensemble fit per energy bin — fits parallelize across the shuffle key and run ONCE (r17: fit output checkpointed before the final sort, so the range-sampling pass no longer re-executes the fit stage)",
+      "t13b_mcmc_perener" -> "one exact-integer phase-bin aggregation, then repartitionByRange(8, ener) + mapPartitions runs one ensemble fit per energy bin — fits parallelize across the range partitions and run ONCE (r17: fit output checkpointed before the final sort, so the range-sampling pass no longer re-executes the fit stage)",
       "d4b_simhash_pairs" -> "equi-self-join on the (band, byte) bucket key — pairs stream through the codegen popcount gate with no per-bucket arrays; skewed buckets remain AQE-splittable",
       "d18_pii_scrub" -> "map-only regex scrub: no Exchange anywhere before the output sort",
       "d19_decontaminate" -> "trigram sets built row-locally; benchmark side joins as a BroadcastHashJoin (corpus side never shuffles for the probe)",

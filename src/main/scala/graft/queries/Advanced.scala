@@ -1,10 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
 import graft.core.Tables._
+import graft.model.{Ensemble, GpHyper, LimbDark}
+import graft.model.Sql.D
 
 /** A8 — BLS spectrum post-processing (ref main.py:5742–5801): signal =
   * depth − rolling median of the spectrum, noise = peak-cut rolling
@@ -86,6 +88,154 @@ object Advanced {
     graft.search.Bls.spectrumPrebinnedTrials(b, "t_us", "vc", trials, levels = 5,
         stats = Some((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
       .select(col("p_us"), round(col("depth") * 1e6).cast("long").as("dc"))
+  }
+
+  private val PDAY = 86400000000L
+  private val P7 = 7L * PDAY
+
+  /** One walk summarized: Ensemble.percentiles (p16/p50/p84 per walk
+    * dimension) and the acceptance fraction. */
+  private[graft] type Fit = (Array[Array[Double]], Double)
+
+  // Walk dimension names in walk order: the posterior tables' `param`
+  // values, shared by each query and its oracle.
+  private val boxDims = Seq("depth", "epoch", "dur")
+  private val ldDims = Seq("rrat", "epoch", "dur")
+  private val t13eDims = Seq("rrat_a", "epoch_a", "rrat_b", "epoch_b")
+  private val rvDims = Seq("gamma", "amp_sin", "amp_cos")
+  private val t13gDims = ldDims ++ Seq("u1", "u2")
+  private val t13hDims = Seq("gamma", "k_amp", "ecc", "omega")
+  private val flareDims = Seq("amp", "t0", "tau")
+  private val t13lDims = boxDims ++ Seq("sigma", "rho")
+
+  /** The LCG noise of every t13 fixture: the integer draw `r` mapped to
+    * [−amp/2, amp/2) — [[noiseSql]] is the same expression in DuckDB. */
+  private def lcgNoise(amp: Double): Column =
+    (col("r").cast("double") / 2147483648.0 - 0.5) * amp
+
+  /** 1 − a 3%-deep box of half-width `half` µs at phase 0, plus the LCG
+    * noise — [[boxFlSql]] in the oracle. */
+  private def boxFlux(half: Long): Column =
+    lit(1.0) - when(col("ph") < half || col("ph") > P7 - half, 0.03).otherwise(0.0) +
+      lcgNoise(0.004)
+
+  /** The t13 injected fixture shared by the single-fit queries (t6b
+    * style, anchored at the data epoch): 4000 points on a uniform 30-d
+    * grid, the integer LCG draw `r`, the 7-d phase `ph` and its 200-bin
+    * `b`. `inject` adds the injected value `v` (flux, or m/s for the RV
+    * fits); Spark quantizes it at `q` and phase-bins it (one shuffle,
+    * exact integer sums), `perBin` may extend the (b, n, sv) rows, and
+    * the driver collects the 200-bin fit window in ONE job — the
+    * reference's division of labor. Returns the bin centers (d), the
+    * per-bin means and the collected rows. [[t13GridSql]] is the
+    * oracle's copy of the same arithmetic. */
+  private def t13Fold(s: SparkSession, d: String, q: Double = 1e6,
+      perBin: DataFrame => DataFrame = identity)(inject: DataFrame => DataFrame)
+      : (Array[Double], Array[Double], Array[Row]) = {
+    val n = 4000L
+    val rows = perBin(inject(base(s, d).agg(min(col("t_us")).as("t0"))
+        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
+        .withColumn("g_us", col("t0") + col("i") * (30L * PDAY / n))
+        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
+        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
+        .withColumn("b", expr(s"(ph * 200) div $P7")))
+      .withColumn("fc", round(col("v") * q).cast("long"))
+      .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv")))
+      .orderBy("b")
+      .collect()
+    (rows.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200),
+      rows.map(r => r.getLong(2).toDouble / r.getLong(1) / q), rows)
+  }
+
+  /** Per-bin means quantized at 1e9: the integers the window guesses
+    * sum, so their SQL replays are order-free. */
+  private def yq9(y: Array[Double]): Array[Long] =
+    y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
+
+  /** The injected LD transit's layers up to μ (p = 0.15, T14 = 1.0 d at
+    * phase 0) as named columns — the per-layer SQL strings that
+    * [[ldLayersSql]] names as CTE columns, so both engines spell one
+    * arithmetic DAG. */
+  private def ldLayers(df: DataFrame): DataFrame = {
+    val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
+    df.withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
+      .withColumn("aph", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
+      .withColumn("hu", expr(LimbDark.huSql("aph", TT)))
+      .withColumn("z", expr(LimbDark.zSql("hu", PT)))
+      .withColumn("lam", expr(LimbDark.lamSql("z", PT)))
+      .withColumn("mu", expr(LimbDark.muSql("z", PT)))
+  }
+
+  /** t13d's and t13j's injection: the LD transit at the model's own
+    * coefficients plus the LCG noise. */
+  private def ldTransit(df: DataFrame): DataFrame =
+    ldLayers(df)
+      .withColumn("iz", expr(LimbDark.izSql("mu")))
+      .withColumn("ldf", expr(LimbDark.fluxSql("hu", LimbDark.D(0.15), "iz", "lam")))
+      .withColumn("v", col("ldf") + lcgNoise(0.004))
+
+  /** The LD walks' ball center: boxGuessQ's window with its depth turned
+    * into a radius ratio, p0 = √(depth·Ω4/I(b)) — [[ldG0Sql]] in SQL. */
+  private def ldGuess(t: Array[Double], y: Array[Double]): Array[Double] = {
+    val g = Ensemble.boxGuessQ(t, yq9(y), 7.0, 1.0)
+    Array(math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2))
+  }
+
+  /** Exact integer Fourier projection of yq on t13f's basis: (Σyq,
+    * Σyq·sq, Σyq·cq) — the RV walks' guess. */
+  private def rvProject(yq: Array[Long]): (Long, Long, Long) = {
+    var sa = 0L; var psu = 0L; var pcu = 0L
+    var b = 0
+    while (b < 200) {
+      sa += yq(b); psu += yq(b) * rvBasis(b)._2; pcu += yq(b) * rvBasis(b)._3; b += 1
+    }
+    (sa, psu, pcu)
+  }
+
+  /** The white-noise box fit of t13, t13b (per ener) and t13m (per
+    * transit): boxLlq at `scale`, a walker-ball center from a mini-BLS
+    * — the deepest 1-day CIRCULAR window of bins, not the single
+    * deepest bin, whose argmin can sit on a transit edge and strand the
+    * ball in a no-overlap local optimum; integer window sums
+    * (boxGuessQ) so the SQL replay is order-free — then the 100×100
+    * sampleQ walk over (depth, epoch, dur) in the prior box. */
+  private[graft] def boxFit(t: Array[Double], y: Array[Double], scale: Double,
+      seed: Long): Fit = {
+    val llq = Ensemble.boxLlq(t, y, scale, period = 7.0) _
+    val (samples, acc) = Ensemble.sampleQ(llq,
+      lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
+      seed = seed, init = Ensemble.boxGuessQ(t, yq9(y), 7.0, 1.0))
+    (Ensemble.percentiles(samples), acc)
+  }
+
+  /** t13l's fit step: the 5-dim (depth, epoch, dur, σ_gp, ρ_gp) walk
+    * under GpHyper.llq, the box guess at the bin-aligned 1.05-d
+    * duration, hyperparameters seeded at (1.5e-3, 0.3), 50×150. */
+  private[graft] def t13lFit(t: Array[Double], y: Array[Double]): Fit = {
+    val llq = GpHyper.llq(t, y, 7.0) _
+    val g = Ensemble.boxGuessQ(t, yq9(y), 7.0, 1.05)
+    val (samples, acc) = Ensemble.sampleQ(llq,
+      lo = Array(-0.2, -3.5, 0.2, 2e-4, 0.06),
+      hi = Array(0.2, 3.5, 2.0, 6e-3, 1.2),
+      nWalkers = 50, nSteps = 150, init = Array(g(0), g(1), g(2), 1.5e-3, 0.3))
+    (Ensemble.percentiles(samples), acc)
+  }
+
+  /** One walk's posterior rows: `acceptance`, then p16/p50/p84 of each
+    * walk dimension, named by `dims` (walk order) and tagged with `sfx`
+    * (t13i reports two walks). [[walkRowsSql]] is the oracle's. */
+  private def walkRows(dims: Seq[String], fit: Fit, sfx: String = "")
+      : Seq[(String, Double, Double, Double)] = {
+    val (pct, acc) = fit
+    (s"acceptance$sfx", acc, acc, acc) +:
+      dims.indices.map(j => (dims(j) + sfx, pct(j)(0), pct(j)(1), pct(j)(2)))
+  }
+
+  /** The t13 posterior table (param, p16, p50, p84), ordered by param. */
+  private def posterior(s: SparkSession,
+      rows: Seq[(String, Double, Double, Double)]): DataFrame = {
+    import s.implicits._
+    rows.sortBy(_._1).toDF("param", "p16", "p50", "p84").orderBy("param")
   }
 
   val queries: Map[String, Q] = Map(
@@ -208,16 +358,10 @@ object Advanced {
     // parallelizes ACROSS fits (t13b). EnsembleSpec pins recovery +
     // determinism; the DuckDB oracle replays the walk bit-exactly.
     "t13_mcmc_fit" -> ((s, d) => {
-      import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      // t6b-style injected fixture anchored at the data epoch: uniform
-      // 30-d grid, integer-LCG noise, a 3%-deep 1-d box at phase 0 —
+      // The injected fixture (t13Fold): a 3%-deep 1-d box at phase 0 —
       // the events fixture carries no transit, and a fit that provably
       // RECOVERS a known signal is the fidelity check (injection-
-      // recovery, same contract as t6b/t14). Spark builds and
-      // phase-bins the series (one shuffle, exact integer sums); the
-      // driver collects the 200-bin fit window and runs the walker
-      // loop — the reference's division of labor.
+      // recovery, same contract as t6b/t14).
       //
       // ORACLE-EXACT since r6: the walk runs through Ensemble.sampleQ —
       // indexed integer draws, integer micro-nat likelihood, integer
@@ -228,47 +372,10 @@ object Advanced {
       // noise IS white by construction, so it is the matched model
       // here; the GP-marginalized branch (gpLogLik) remains covered by
       // EnsembleSpec's correlated-baseline test and the t3c oracle.
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("flux", lit(1.0)
-          - when(col("ph") < PDAY / 2 || col("ph") > P7 - PDAY / 2, 0.03).otherwise(0.0)
-          + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
+      val (t, y, _) = t13Fold(s, d)(_.withColumn("v", boxFlux(PDAY / 2)))
       // yerr = 4e-4 (the fixture's noise scale): micro-nat likelihood
       // scale = 1e6 / (2·yerr²) = 3.125e12
-      val llq = graft.model.Ensemble.boxLlq(t, y, scale = 3.125e12, period = 7.0) _
-      // data-derived walker-ball center (the reference seeds walkers
-      // around prior means): a mini-BLS — the deepest 1-day CIRCULAR
-      // window of bins, not the single deepest bin, whose argmin can
-      // sit on a transit edge and strand the ball in a no-overlap
-      // local optimum. Integer window sums (boxGuessQ) so the SQL
-      // replay is order-free.
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-        lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-        nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("depth", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+      posterior(s, walkRows(boxDims, boxFit(t, y, scale = 3.125e12, seed = 42L)))
     }),
 
     // T13c — GP-LIKELIHOOD MCMC (the reference's DEFAULT inference
@@ -296,44 +403,18 @@ object Advanced {
     // geometry 50×60 keeps the oracle's 3050 GP evaluations
     // (200 bins × 32 lags each) tractable in DuckDB.
     "t13c_mcmc_gp" -> ((s, d) => {
-      import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("flux", lit(1.0)
-          - when(col("ph") < PDAY / 2 || col("ph") > P7 - PDAY / 2, 0.03).otherwise(0.0)
-          + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .withColumn("wigq", expr(t13cWigSql("b")))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6
-        + (r.getLong(3) - 4000L).toDouble * 1.25e-6)
+      val (t, y0, bins) = t13Fold(s, d,
+        perBin = _.withColumn("wigq", expr(t13cWigSql("b"))))(
+        _.withColumn("v", boxFlux(PDAY / 2)))
+      val y = y0.zip(bins).map { case (v, r) =>
+        v + (r.getLong(3) - 4000L).toDouble * 1.25e-6 }
       val (cq, scale) = t13cGp
-      val llq = graft.model.Ensemble.gpBoxLlq(t, y, cq, scale, period = 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
+      val llq = Ensemble.gpBoxLlq(t, y, cq, scale, period = 7.0) _
+      val guess = Ensemble.boxGuessQ(t, yq9(y), 7.0, 1.0)
+      val (samples, acc) = Ensemble.sampleQ(llq,
         lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-        nWalkers = 50, nSteps = 60, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("depth", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 60, init = guess)
+      posterior(s, walkRows(boxDims, (Ensemble.percentiles(samples), acc)))
     }),
 
     // T13d — LIMB-DARKENED MCMC fit (the reference's ACTUAL model
@@ -355,51 +436,12 @@ object Advanced {
     // both engines produce bit-identical doubles, and the micro-nat
     // rounding + integer accept comparison replay exactly as in t13.
     "t13d_mcmc_ld" -> ((s, d) => {
-      import s.implicits._
-      import graft.model.LimbDark
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
-        .withColumn("aph", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
-        .withColumn("hu", expr(LimbDark.huSql("aph", TT)))
-        .withColumn("z", expr(LimbDark.zSql("hu", PT)))
-        .withColumn("lam", expr(LimbDark.lamSql("z", PT)))
-        .withColumn("mu", expr(LimbDark.muSql("z", PT)))
-        .withColumn("iz", expr(LimbDark.izSql("mu")))
-        .withColumn("ldf", expr(LimbDark.fluxSql("hu", PT, "iz", "lam")))
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("flux", col("ldf") + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val llq = graft.model.Ensemble.ldBoxLlq(t, y, scale = 3.125e12, period = 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val guess = Array(
-        math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2))
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
+      val (t, y, _) = t13Fold(s, d)(ldTransit)
+      val llq = Ensemble.ldBoxLlq(t, y, scale = 3.125e12, period = 7.0) _
+      val (samples, acc) = Ensemble.sampleQ(llq,
         lo = Array(0.02, -3.5, 0.2), hi = Array(0.45, 3.5, 2.0),
-        nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("rrat", pct(0)(0), pct(0)(1), pct(0)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        init = ldGuess(t, y))
+      posterior(s, walkRows(ldDims, (Ensemble.percentiles(samples), acc)))
     }),
 
     // T13e — TWO-PLANET joint limb-darkened fit (the reference's
@@ -425,18 +467,9 @@ object Advanced {
     // measured recovery (0.150, 0.001, 0.110, 1.200) at 300 vs a
     // still-biased (0.142, 0.004, 0.037, 1.107) at 60.
     "t13e_mcmc_ld2" -> ((s, d) => {
-      import s.implicits._
-      import graft.model.LimbDark
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
       val PA = LimbDark.D(0.15); val TA = LimbDark.D(1.0)
       val PB = LimbDark.D(0.11); val TB = LimbDark.D(0.5)
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
+      val (t, y, _) = t13Fold(s, d)(_
         .withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
         .withColumn("aph_a", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
         .withColumn("aph_b", expr("abs((phd - 1.2 + 1.75) % 3.5 - 1.75)"))
@@ -452,16 +485,8 @@ object Advanced {
         .withColumn("mu_b", expr(LimbDark.muSql("z_b", PB)))
         .withColumn("iz_b", expr(LimbDark.izSql("mu_b")))
         .withColumn("f_b", expr(LimbDark.fluxSql("hu_b", PB, "iz_b", "lam_b")))
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("flux", expr("f_a + f_b - 1.0") + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
+        .withColumn("v", expr("f_a + f_b - 1.0") + lcgNoise(0.004)))
+      val yq = yq9(y)
       // two-window guess: mirror of the oracle's gx block (b1 = deepest
       // 29-bin circular window; b2 = deepest at circular distance > 28)
       val h = 14
@@ -483,20 +508,11 @@ object Advanced {
       val guess = Array(
         math.sqrt(math.max(dA * LimbDark.KK, 4e-4)), g1,
         math.sqrt(math.max(dB * LimbDark.KK, 4e-4)), g3)
-      val llq = graft.model.Ensemble.ld2Llq(t, y, scale = 3.125e12) _
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
+      val llq = Ensemble.ld2Llq(t, y, scale = 3.125e12) _
+      val (samples, acc) = Ensemble.sampleQ(llq,
         lo = Array(0.02, -3.5, 0.02, -1.75), hi = Array(0.45, 3.5, 0.45, 1.75),
-        nWalkers = 50, nSteps = 300, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("epoch_a", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("epoch_b", pct(3)(0), pct(3)(1), pct(3)(2)),
-        ("rrat_a", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("rrat_b", pct(2)(0), pct(2)(1), pct(2)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 300, init = guess)
+      posterior(s, walkRows(t13eDims, (Ensemble.percentiles(samples), acc)))
     }),
 
     // T13f — RADIAL-VELOCITY orbit MCMC (the reference's RV model
@@ -513,51 +529,25 @@ object Advanced {
     // (integer sums of yq·sq / yq·cq — order-free, SQL-replayable).
     "t13f_mcmc_rv" -> ((s, d) => {
       import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
       val bdf = broadcast(rvBasis.toDF("bb", "sq", "cq"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
+      val (_, y, _) = t13Fold(s, d, q = 1e3)(_
         .join(bdf, col("b") === col("bb"))
         .withColumn("v", expr("CAST(12.5 AS DOUBLE) " +
             "+ CAST(8.0 AS DOUBLE) * (sq / 1e6) " +
             "+ CAST(-5.0 AS DOUBLE) * (cq / 1e6)")
-          + (col("r").cast("double") / 2147483648.0 - 0.5) * 4.0)
-        .withColumn("rc", round(col("v") * 1e3).cast("long"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("rc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e3)
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val sq = rvBasis.map(_._2).toArray
-      val cq = rvBasis.map(_._3).toArray
+          + lcgNoise(4.0)))
       // exact Fourier-projection guess (yq·sq ≤ ~1.25e16, ×200 < 2^63)
-      var sa = 0L; var psu = 0L; var pcu = 0L
-      var b = 0
-      while (b < 200) { sa += yq(b); psu += yq(b) * sq(b); pcu += yq(b) * cq(b); b += 1 }
+      val (sa, psu, pcu) = rvProject(yq9(y))
       val guess = Array(
         sa.toDouble / 200 / 1e9,
         2.0 * (psu.toDouble / 200 / 1e15),
         2.0 * (pcu.toDouble / 200 / 1e15))
       // binned noise σ ≈ (2/√3)/√20 ≈ 0.26 m/s ⇒ scale = 1e6/(2σ²) ≈ 7.4e6
-      val llq = graft.model.Ensemble.rvLlq(y, sq, cq, scale = 7.4e6) _
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-        lo = Array(0.0, -15.0, -15.0), hi = Array(25.0, 15.0, 15.0),
-        nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("amp_cos", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("amp_sin", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("gamma", pct(0)(0), pct(0)(1), pct(0)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+      val llq = Ensemble.rvLlq(y, rvBasis.map(_._2).toArray, rvBasis.map(_._3).toArray,
+        scale = 7.4e6) _
+      val (samples, acc) = Ensemble.sampleQ(llq,
+        lo = Array(0.0, -15.0, -15.0), hi = Array(25.0, 15.0, 15.0), init = guess)
+      posterior(s, walkRows(rvDims, (Ensemble.percentiles(samples), acc)))
     }),
 
     // T13g — the LD COEFFICIENTS join the walk (r9, verdict #3; the
@@ -578,57 +568,19 @@ object Advanced {
     // higher-dim walks need the longer chain to converge from the
     // tiny ball).
     "t13g_mcmc_ldfit" -> ((s, d) => {
-      import s.implicits._
-      import graft.model.LimbDark
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
       val U1I = LimbDark.D(0.6); val U2I = LimbDark.D(0.1)
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
-        .withColumn("aph", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
-        .withColumn("hu", expr(LimbDark.huSql("aph", TT)))
-        .withColumn("z", expr(LimbDark.zSql("hu", PT)))
-        .withColumn("lam", expr(LimbDark.lamSql("z", PT)))
-        .withColumn("mu", expr(LimbDark.muSql("z", PT)))
+      val (t, y, _) = t13Fold(s, d)(ldLayers(_)
         .withColumn("iz", expr(LimbDark.izSqlU("mu", U1I, U2I)))
         .withColumn("om4", expr(LimbDark.om4SqlU(U1I, U2I)))
-        .withColumn("ldf", expr(LimbDark.fluxSqlU("hu", PT, "iz", "lam", "om4")))
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("flux", col("ldf") + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val llq = graft.model.Ensemble.ldFitLlq(t, y, scale = 3.125e12, period = 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val guess = Array(
-        math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2),
-        LimbDark.U1, LimbDark.U2)
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
+        .withColumn("ldf", expr(LimbDark.fluxSqlU("hu", LimbDark.D(0.15), "iz", "lam", "om4")))
+        .withColumn("v", col("ldf") + lcgNoise(0.004)))
+      val llq = Ensemble.ldFitLlq(t, y, scale = 3.125e12, period = 7.0) _
+      val (samples, acc) = Ensemble.sampleQ(llq,
         lo = Array(0.02, -3.5, 0.2, 0.0, -0.3),
         hi = Array(0.45, 3.5, 2.0, 1.2, 0.7),
-        nWalkers = 50, nSteps = 300, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("rrat", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("u1", pct(3)(0), pct(3)(1), pct(3)(2)),
-        ("u2", pct(4)(0), pct(4)(1), pct(4)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 300,
+        init = ldGuess(t, y) ++ Array(LimbDark.U1, LimbDark.U2))
+      posterior(s, walkRows(t13gDims, (Ensemble.percentiles(samples), acc)))
     }),
 
     // T13h — ECCENTRIC Keplerian RV fit (r9, verdict #4): extends
@@ -649,36 +601,14 @@ object Advanced {
     // grid by integer-llq argmax (atan2 is libm — banned).
     "t13h_mcmc_rvecc" -> ((s, d) => {
       import s.implicits._
-      import graft.model.{Ensemble, Kepler}
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
+      import graft.model.Kepler
       val bdf = broadcast(t13hTrue.toDF("bb", "vq"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
+      val (t, y, _) = t13Fold(s, d, q = 1e3)(_
         .join(bdf, col("b") === col("bb"))
-        .withColumn("v", expr("vq / 1e6")
-          + (col("r").cast("double") / 2147483648.0 - 0.5) * 4.0)
-        .withColumn("rc", round(col("v") * 1e3).cast("long"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("rc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e3)
-      val m = bins.map { r =>
-        val tb = (r.getLong(0).toDouble + 0.5) * 7.0 / 200
-        Kepler.TWOPI * (tb / 7.0)
-      }
+        .withColumn("v", expr("vq / 1e6") + lcgNoise(4.0)))
+      val m = t.map(tb => Kepler.TWOPI * (tb / 7.0))
       val llq = Ensemble.rvEccLlq(y, m, scale = 7.4e6) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val sq = rvBasis.map(_._2).toArray
-      val cq = rvBasis.map(_._3).toArray
-      var sa = 0L; var psu = 0L; var pcu = 0L
-      var b = 0
-      while (b < 200) { sa += yq(b); psu += yq(b) * sq(b); pcu += yq(b) * cq(b); b += 1 }
+      val (sa, psu, pcu) = rvProject(yq9(y))
       // bounds (the r9 2^53 audit): |y| ≤ ~25 on the prior box so
       // |yq| ≤ 2.5e10, |yq·sq| ≤ 2.5e16, |Σ200| ≤ 5e18 < 2^63 (1.8×
       // headroom — re-derive if the prior box or scales change). The
@@ -696,17 +626,8 @@ object Advanced {
       val (samples, acc) = Ensemble.sampleQ(llq,
         lo = Array(0.0, 0.0, 0.0, -Kepler.PI),
         hi = Array(25.0, 20.0, 0.6, Kepler.PI),
-        nWalkers = 50, nSteps = 300, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("ecc", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("gamma", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("k_amp", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("omega", pct(3)(0), pct(3)(1), pct(3)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 300, init = guess)
+      posterior(s, walkRows(t13hDims, (Ensemble.percentiles(samples), acc)))
     }),
 
     // T13i — MCMC fit under the EXACT occultation (r10, verdict #1):
@@ -735,52 +656,22 @@ object Advanced {
     // quadrature per proposal).
     "t13i_mcmc_ldx" -> ((s, d) => {
       import s.implicits._
-      import graft.model.{Ensemble, LimbDark}
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
       val bdf = broadcast(t13iTrue.toDF("bb", "fxq"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
+      val (t, y, _) = t13Fold(s, d)(_
         .join(bdf, col("b") === col("bb"))
-        .withColumn("flux", expr("fxq / 1e9")
-          + (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val guess = Array(
-        math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2))
+        .withColumn("v", expr("fxq / 1e9") + lcgNoise(0.004)))
+      val guess = ldGuess(t, y)
       val lo = Array(0.02, -3.5, 0.2); val hi = Array(0.45, 3.5, 2.0)
       val llqX = Ensemble.ldxLlq(t, y, scale = 3.125e12, period = 7.0,
         n = t13iNFit) _
       val llqA = Ensemble.ldBoxLlq(t, y, scale = 3.125e12, period = 7.0) _
       val (sx, accx) = Ensemble.sampleQ(llqX, lo, hi,
-        nWalkers = 50, nSteps = 150, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
+        nWalkers = 50, nSteps = 150, init = guess)
       val (sa, acca) = Ensemble.sampleQ(llqA, lo, hi,
-        nWalkers = 50, nSteps = 150, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val px = Ensemble.percentiles(sx); val pa = Ensemble.percentiles(sa)
-      Seq(
-        ("acceptance_approx", acca, acca, acca),
-        ("acceptance_exact", accx, accx, accx),
-        ("dur_approx", pa(2)(0), pa(2)(1), pa(2)(2)),
-        ("dur_exact", px(2)(0), px(2)(1), px(2)(2)),
-        ("epoch_approx", pa(1)(0), pa(1)(1), pa(1)(2)),
-        ("epoch_exact", px(1)(0), px(1)(1), px(1)(2)),
-        ("rrat_approx", pa(0)(0), pa(0)(1), pa(0)(2)),
-        ("rrat_exact", px(0)(0), px(0)(1), px(0)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 150, init = guess)
+      posterior(s,
+        walkRows(ldDims, (Ensemble.percentiles(sx), accx), "_exact") ++
+        walkRows(ldDims, (Ensemble.percentiles(sa), acca), "_approx"))
     }),
 
     // T13j — the OPTIMIZER inference mode (r10, verdict #2): the
@@ -801,41 +692,11 @@ object Advanced {
     // the declared iteration count.
     "t13j_opti" -> ((s, d) => {
       import s.implicits._
-      import graft.model.{Ensemble, LimbDark}
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
-        .withColumn("aph", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
-        .withColumn("hu", expr(LimbDark.huSql("aph", TT)))
-        .withColumn("z", expr(LimbDark.zSql("hu", PT)))
-        .withColumn("lam", expr(LimbDark.lamSql("z", PT)))
-        .withColumn("mu", expr(LimbDark.muSql("z", PT)))
-        .withColumn("iz", expr(LimbDark.izSql("mu")))
-        .withColumn("ldf", expr(LimbDark.fluxSql("hu", PT, "iz", "lam")))
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("flux", col("ldf") + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
+      val (t, y, _) = t13Fold(s, d)(ldTransit)
       val llq = Ensemble.ldBoxLlq(t, y, scale = 3.125e12, period = 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val guess = Array(
-        math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2))
       val (bestV, bestLl) = Ensemble.nelderMeadQ(llq,
         lo = Array(0.02, -3.5, 0.2), hi = Array(0.45, 3.5, 2.0),
-        init = guess, nIter = 120)
+        init = ldGuess(t, y), nIter = 120)
       Seq(
         ("dur", bestV(2)),
         ("epoch", bestV(1)),
@@ -860,27 +721,11 @@ object Advanced {
     // excess over the global mean for A, mid-prior for τ.
     "t13k_mcmc_flare" -> ((s, d) => {
       import s.implicits._
-      import graft.model.Ensemble
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
       val bdf = broadcast(t13kTrue.toDF("bb", "fxq"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
+      val (t, y, _) = t13Fold(s, d)(_
         .join(bdf, col("b") === col("bb"))
-        .withColumn("flux", expr("fxq / 1e9")
-          + (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
+        .withColumn("v", expr("fxq / 1e9") + lcgNoise(0.004)))
+      val yq = yq9(y)
       // peak-bin guess: integer argmax (yq DESC, b ASC first-wins)
       val bmax = (0 until 200).minBy(b => (-yq(b), b))
       var sa = 0L; yq.foreach(sa += _)
@@ -890,17 +735,8 @@ object Advanced {
         0.3)
       val llq = Ensemble.flareLlq(t, y, scale = 3.125e12) _
       val (samples, acc) = Ensemble.sampleQ(llq,
-        lo = Array(0.005, 0.5, 0.05), hi = Array(0.15, 6.0, 1.0),
-        nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("amp", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("t0", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("tau", pct(2)(0), pct(2)(1), pct(2)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        lo = Array(0.005, 0.5, 0.05), hi = Array(0.15, 6.0, 1.0), init = guess)
+      posterior(s, walkRows(flareDims, (Ensemble.percentiles(samples), acc)))
     }),
 
     // T13l — GP HYPERPARAMETERS JOIN THE WALK (r11 verdict #1, the one
@@ -943,84 +779,45 @@ object Advanced {
     // (GpHyperSpec "fixed-wrong vs joint": widths 0.00071 vs 0.00106).
     "t13l_mcmc_gphyper" -> ((s, d) => {
       import s.implicits._
-      import graft.model.{Ensemble, GpHyper}
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
       val bdf = broadcast(t13lWig.toDF("wb", "wv"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("flux", lit(1.0)
-          - when(col("ph") < 45360000000L || col("ph") > 559440000000L, 0.03)
-            .otherwise(0.0)
-          + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .join(bdf, col("b") === col("wb"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6
-        + r.getLong(4).toDouble * 1e-9)
-      val llq = GpHyper.llq(t, y, 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = Ensemble.boxGuessQ(t, yq, 7.0, 1.05)
-      val guess = Array(g(0), g(1), g(2), 1.5e-3, 0.3)
-      val (samples, acc) = Ensemble.sampleQ(llq,
-        lo = Array(-0.2, -3.5, 0.2, 2e-4, 0.06),
-        hi = Array(0.2, 3.5, 2.0, 6e-3, 1.2),
-        nWalkers = 50, nSteps = 150, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("depth", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("rho", pct(4)(0), pct(4)(1), pct(4)(2)),
-        ("sigma", pct(3)(0), pct(3)(1), pct(3)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+      // half-dur 0.525 d = 45360000000 µs: the bin-aligned box
+      val (t, y0, bins) = t13Fold(s, d,
+        perBin = _.join(bdf, col("b") === col("wb")))(
+        _.withColumn("v", boxFlux(45360000000L)))
+      val y = y0.zip(bins).map { case (v, r) => v + r.getLong(4).toDouble * 1e-9 }
+      posterior(s, walkRows(t13lDims, t13lFit(t, y)))
     }),
 
     // T13 per-energy-bin fits, SPARK-PARALLEL (ref main.py:12301–12316:
     // typemodlenerfitt='iter' loops the whole fit once per energy bin —
     // here the loop IS the shuffle key): phase-fold each energy bin at
     // P7 into 200 exact-integer phase bins (one aggregation), then
-    // groupByKey(ener).mapGroups runs the full 100×100 GP-likelihood
-    // ensemble fit per bin in its own task. The output is the per-ener
-    // depth posterior — the transmission-spectrum table en1 summarizes
-    // descriptively, now with 16/50/84 uncertainties. Deterministic:
-    // integer bin sums, sorted group iteration, per-ener seed.
+    // repartitionByRange(8, ener) + mapPartitions runs the full 100×100
+    // white-noise box fit (boxFit) per bin in its own task. The output
+    // is the per-ener depth posterior — the transmission-spectrum table
+    // en1 summarizes descriptively, now with 16/50/84 uncertainties.
+    // Deterministic: integer bin sums, sorted group iteration, per-ener
+    // seed.
     "t13b_mcmc_perener" -> ((s, d) => {
       import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
       val nb = 200; val n = 4000L
       val step = 30L * PDAY / n
       // 8 energy bins with an injected DEPTH RAMP 0.015 + 0.003·ener —
       // the per-ener fits must recover a transmission-spectrum slope,
       // not just one depth. Grid+inject+bin is one Spark aggregation;
-      // then groupByKey(ener).mapGroups runs the full 100×100 ensemble
-      // fit per energy bin in its own task. Deterministic: integer bin
-      // sums, sorted group iteration, per-ener seed.
+      // then one partition per energy bin runs its ensemble fit.
       val bins = base(s, d).agg(min(col("t_us")).as("t0"))
         .withColumn("ener", explode(sequence(lit(0L), lit(7L))))
         .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
         .withColumn("g_us", col("t0") + col("i") * step)
         .withColumn("r",
           ((col("i") + col("ener") * 7919L) % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
         .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
         .withColumn("dtrue", lit(0.015) + col("ener") * lit(0.003))
         .withColumn("flux", lit(1.0)
           - when(col("ph") < PDAY / 2 || col("ph") > P7 - PDAY / 2, col("dtrue"))
             .otherwise(0.0)
-          + col("noise"))
+          + lcgNoise(0.004))
         .withColumn("fc", round(col("flux") * 1e6).cast("long"))
         .withColumn("b", expr(s"(ph * $nb) div $P7"))
         .groupBy("ener", "b")
@@ -1043,16 +840,8 @@ object Advanced {
         .mapPartitions(_.toArray.groupBy(_._1).toSeq.sortBy(_._1).iterator
           .map { case (ener, rs0) =>
         val rs = rs0.sortBy(_._2)
-        val t = rs.map(r => (r._2.toDouble + 0.5) * 7.0 / nb)
-        val y = rs.map(r => r._4.toDouble / r._3 / 1e6)
-        val llq = graft.model.Ensemble.boxLlq(t, y, scale = 3.125e12, period = 7.0) _
-        val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-        val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-        val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-          lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-          nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L + ener,
-          init = guess, ballFrac = 0.005)
-        val pct = graft.model.Ensemble.percentiles(samples)
+        val (pct, acc) = boxFit(rs.map(r => (r._2.toDouble + 0.5) * 7.0 / nb),
+          rs.map(r => r._4.toDouble / r._3 / 1e6), scale = 3.125e12, seed = 42L + ener)
         (ener, pct(0)(0), pct(0)(1), pct(0)(2), acc)
       }).toDF("ener", "depth_p16", "depth_p50", "depth_p84", "acceptance")
         // localCheckpoint before the orderBy (r17): the fits sit in the
@@ -1095,7 +884,7 @@ object Advanced {
     // depth-weighted t21-style measurement on the same fixture.
     "t13m_mcmc_ttv" -> ((s, d) => {
       import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY; val HP = P7 / 2
+      val HP = P7 / 2
       val nb = 500; val n = 4500L; val step = 604800000L // 0.007 d
       val bins = base(s, d).agg(min(col("t_us")).as("t0"))
         .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
@@ -1107,10 +896,9 @@ object Advanced {
           .when(col("k") === 2L, TtvInjUs(1))
           .when(col("k") === 3L, TtvInjUs(2)).otherwise(TtvInjUs(3)))
         .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
         .withColumn("flux", lit(1.0)
           - when(abs(col("off") - col("ttv")) < PDAY / 2, 0.03).otherwise(0.0)
-          + col("noise"))
+          + lcgNoise(0.004))
         .withColumn("fc", round(col("flux") * 1e6).cast("long"))
         .withColumn("phus", (col("off") + lit(P7 + P7 / 4)) % P7)
         .withColumn("b", expr(s"(phus * $nb) div $P7"))
@@ -1121,16 +909,8 @@ object Advanced {
         .mapPartitions(_.toArray.groupBy(_._1).toSeq.sortBy(_._1).iterator
           .map { case (k, rs0) =>
             val rs = rs0.sortBy(_._2)
-            val t = rs.map(r => (r._2.toDouble + 0.5) * 7.0 / nb)
-            val y = rs.map(r => r._4.toDouble / r._3 / 1e6)
-            val llq = graft.model.Ensemble.boxLlq(t, y, scale = 7.5e11, period = 7.0) _
-            val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-            val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-            val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-              lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-              nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L + k,
-              init = guess, ballFrac = 0.005)
-            val pct = graft.model.Ensemble.percentiles(samples)
+            val (pct, acc) = boxFit(rs.map(r => (r._2.toDouble + 0.5) * 7.0 / nb),
+              rs.map(r => r._4.toDouble / r._3 / 1e6), scale = 7.5e11, seed = 42L + k)
             (k, pct(1)(0), pct(1)(1), pct(1)(2),
               (pct(1)(1) - 1.75) * 1440.0, acc)
           })
@@ -1383,39 +1163,6 @@ object Advanced {
        |  WHERE d2 > CAST(sv AS DOUBLE)/n - 3*sqrt((q - CAST(sv AS DOUBLE)*sv/n)/n)
        |    AND d2 < CAST(sv AS DOUBLE)/n + 3*sqrt((q - CAST(sv AS DOUBLE)*sv/n)/n))""".stripMargin
 
-  /** SQL replay of Ensemble.sampleQ for the t13 oracles: one recursive
-    * CTE advances the WHOLE 100-walker ensemble one stretch-move step
-    * per recursion round (walkers move from the previous ensemble
-    * state, so within a step all 100 proposals are independent — the
-    * property that makes the walk set-expressible). Every float op
-    * mirrors the Scala kernel's IEEE expression shape exactly; draws
-    * are the same stateless integer hash; the likelihood is the same
-    * order-free integer micro-nat sum; accept/reject is the same
-    * integer comparison over ln-values quantized at 1e6 (ln is the one
-    * transcendental — lnQ6's runtime margin assert on the Scala side
-    * proves the fixed fixture rounds identically under any ≤1-ulp
-    * libm). DECIMAL pitfalls (memory: round5): every literal that
-    * meets another literal is CAST to DOUBLE; sums of BIGINT are CAST
-    * back from HUGEINT.
-    *
-    * @param enersSql  one row per fit: `SELECT ... AS ener`
-    * @param fixtureSql CTEs ending in `bins(ener, b, tb, y, yq)`
-    * @param seedBase  Scala-side seed = seedBase + ener
-    * @param nW,nSteps ensemble geometry (mirrors sampleQ's arguments)
-    * @param llqGen    (alias, paramPrefix) → scalar-subquery SQL for
-    *                  the integer micro-nat likelihood of that row's
-    *                  parameter columns; None → the white-noise
-    *                  boxLlq replay (t13/t13b). t13c passes the GP
-    *                  innovation-filter likelihood here.
-    * @param extraCte  additional CTEs (e.g. the GP lag-weight VALUES
-    *                  table) injected after the fixture
-    */
-  /** Depth of the deepest 1-day circular window (the boxGuessQ g0
-    * shape) — exposed so llq variants can transform it (t13d turns it
-    * into a radius-ratio guess). */
-  private val mcmcDepthG0 =
-    "(CAST(sa AS DOUBLE) / 200 - CAST(w AS DOUBLE) / 29) / 1e9"
-
   /** t13f's quantized trig basis at the 200 fold-bin centers:
     * (b, round(sin·1e6), round(cos·1e6)) — computed ONCE and injected
     * as literals into BOTH the Spark plan and the DuckDB oracle (the
@@ -1480,6 +1227,33 @@ object Advanced {
     (0 until 8).map(j =>
       -graft.model.Kepler.PI + (2 * j + 1) * graft.model.Kepler.PI / 8.0)
 
+  /** SQL replay of Ensemble.sampleQ for the t13 oracles: one recursive
+    * CTE advances the WHOLE 100-walker ensemble one stretch-move step
+    * per recursion round (walkers move from the previous ensemble
+    * state, so within a step all 100 proposals are independent — the
+    * property that makes the walk set-expressible). Every float op
+    * mirrors the Scala kernel's IEEE expression shape exactly; draws
+    * are the same stateless integer hash; the likelihood is the same
+    * order-free integer micro-nat sum; accept/reject is the same
+    * integer comparison over ln-values quantized at 1e6 (ln is the one
+    * transcendental — lnQ6's runtime margin assert on the Scala side
+    * proves the fixed fixture rounds identically under any ≤1-ulp
+    * libm). DECIMAL pitfalls (memory: round5): every literal that
+    * meets another literal is CAST to DOUBLE; sums of BIGINT are CAST
+    * back from HUGEINT.
+    *
+    * @param enersSql  one row per fit: `SELECT ... AS ener`
+    * @param fixtureSql CTEs ending in `bins(ener, b, tb, y, yq)`
+    * @param seedBase  Scala-side seed = seedBase + ener
+    * @param nW,nSteps ensemble geometry (mirrors sampleQ's arguments)
+    * @param llqGen    (alias, paramPrefix) → scalar-subquery SQL for
+    *                  the integer micro-nat likelihood of that row's
+    *                  parameter columns; None → the white-noise
+    *                  boxLlq replay (t13/t13b). t13c passes the GP
+    *                  innovation-filter likelihood here.
+    * @param extraCte  additional CTEs (e.g. the GP lag-weight VALUES
+    *                  table) injected after the fixture
+    */
   private def mcmcSamplerSql(enersSql: String, fixtureSql: String,
                              seedBase: Long,
                              nW: Int = 100, nSteps: Int = 100,
@@ -1498,19 +1272,8 @@ object Advanced {
     require(his.length == nd && (nd == 3 || gxBlockSql.isDefined),
       "mcmcSamplerSql: non-3-dim walks need an explicit gx block")
     val dims = 0 until nd
-    def D(x: Double) = s"CAST($x AS DOUBLE)"
-    // box model at bin `bb` for parameter columns $al.${p}0..2 —
-    // mirrors Ensemble.boxModel: ph = fmod-wrap into [0,P) minus P/2
-    // (DuckDB fmod is floored mod = Java's truncated % plus the same
-    // +P wrap, bit-identically — verified on negative operands)
-    def mdl(al: String, p: String) =
-      s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5) < $al.${p}2 / 2" +
-      s" THEN ${D(1.0)} ELSE ${D(0.0)} END))"
-    // order-free integer micro-nat log-likelihood (Ensemble.boxLlq),
-    // scale = 1e6/(2·(4e-4)²) = 3.125e12
-    val llq: (String, String) => String = llqGen.getOrElse((al, p) =>
-      s"(SELECT CAST(-sum(CAST(round((bb.y - ${mdl(al, p)}) * (bb.y - ${mdl(al, p)}) * 3.125e12)" +
-      s" AS BIGINT)) AS BIGINT) FROM bins bb WHERE bb.ener = $al.ener)")
+    // white-noise default: scale = 1e6/(2·(4e-4)²) = 3.125e12
+    val llq = llqGen.getOrElse(boxLlqSql("3.125e12"))
     def lnq(x: String) = s"CAST(round(ln($x) * 1e6) AS BIGINT)"
     val burnRow = (nSteps * 0.3).toInt + 1 // first post-burn recursion row
     val nSamples = (nSteps - (nSteps * 0.3).toInt) * nW
@@ -1531,25 +1294,7 @@ object Advanced {
       s"""(SELECT CASE WHEN r % ${nW - 1} >= wt.k THEN r % ${nW - 1} + 1 ELSE r % ${nW - 1} END
          |                       FROM dr WHERE dr.ener = e.ener
          |                         AND dr.idx = (e.step * $nW + wt.k) * 3)""".stripMargin
-    val gxDefault =
-      s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-         |  FROM bins c
-         |  CROSS JOIN (SELECT unnest(range(-14, 15)) AS kk) o
-         |  JOIN bins b2 ON b2.ener = c.ener
-         |    AND b2.b = ((c.b + o.kk) % 200 + 200) % 200
-         |  GROUP BY 1, 2),
-         |best AS (SELECT ener, c, w FROM (
-         |    SELECT ener, c, w,
-         |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-         |    FROM gw) WHERE rw = 1),
-         |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-         |gx AS (SELECT best.ener AS ener,
-         |    ${g0Sql.getOrElse(mcmcDepthG0)} AS g0,
-         |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
-         |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
-         |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-         |    ${D(1.0)} AS g2
-         |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
+    val gxDefault = windowGxSql(g0 = g0Sql)
     val pcBlocks = dims.map { d =>
       s"""o$d AS (SELECT ener, w$d AS x,
          |    row_number() OVER (PARTITION BY ener ORDER BY w$d) - 1 AS rn FROM smp),
@@ -1648,9 +1393,77 @@ object Advanced {
        |accr AS (SELECT ener, CAST(nacc AS DOUBLE) / $nProps AS a
        |  FROM ensm WHERE step = $nSteps)""".stripMargin
   }
+  /** The box model at bin alias `ba` for walk columns $al.${p}0..2 —
+    * mirrors Ensemble.boxModel: ph = fmod-wrap into [0,P) minus P/2
+    * (DuckDB fmod is floored mod = Java's truncated % plus the same
+    * +P wrap, bit-identically — verified on negative operands). */
+  private def boxMdlSql(al: String, p: String, ba: String = "bb"): String =
+    s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod($ba.tb - $al.${p}1 + 3.5, 7.0) - 3.5) < $al.${p}2 / 2" +
+    s" THEN ${D(1.0)} ELSE ${D(0.0)} END))"
 
-  /** t13's fixture CTEs (mirrors the declared query's Spark fixture
-    * bit-for-bit) ending in bins(ener, b, tb, y, yq); ener ≡ 0. */
+  /** The box residual of bin alias `ba` as an integer at 1e8 — the GP
+    * likelihoods' innovation input. */
+  private def boxResidSql(al: String, p: String, ba: String): String =
+    s"CAST(round(($ba.y - ${boxMdlSql(al, p, ba)}) * 1e8) AS BIGINT)"
+
+  /** Ensemble.boxLlq as a correlated subquery: the order-free integer
+    * micro-nat white-noise log-likelihood at `scale` (1e6/(2·yerr²)). */
+  private def boxLlqSql(scale: String): (String, String) => String = (al, p) =>
+    s"(SELECT CAST(-sum(CAST(round((bb.y - ${boxMdlSql(al, p)}) * (bb.y - ${boxMdlSql(al, p)}) * $scale)" +
+    s" AS BIGINT)) AS BIGINT) FROM bins bb WHERE bb.ener = $al.ener)"
+
+  /** Ensemble.ldBoxLlq at columns $a.$c0..$c2, the limb-darkened model
+    * inline (LimbDark.fluxInlineSql — the engine's layer strings
+    * composed by substitution). */
+  private def ldLlqAt(a: String, c0: String, c1: String, c2: String): String = {
+    val aph = s"abs(fmod(bb.tb - $a.$c1 + 3.5, 7.0) - 3.5)"
+    s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
+    s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
+    LimbDark.fluxInlineSql(aph, s"$a.$c0", s"$a.$c2") +
+    s" AS mm FROM bins bb WHERE bb.ener = $a.ener) qq)"
+  }
+  private val ldLlqSql: (String, String) => String = (al, p) =>
+    ldLlqAt(al, s"${p}0", s"${p}1", s"${p}2")
+
+  /** Depth of the deepest circular window of 2h+1 bins out of `nb` (the
+    * boxGuessQ g0 shape). */
+  private def windowDepthSql(nb: Int = 200, h: Int = 14): String =
+    s"(CAST(sa AS DOUBLE) / $nb - CAST(w AS DOUBLE) / ${2 * h + 1}) / 1e9"
+
+  /** [[ldGuess]]'s radius-ratio g0: the window depth through the
+    * identical √/max shape the Scala side applies after boxGuessQ. */
+  private val ldG0Sql =
+    s"sqrt(GREATEST(${windowDepthSql()} * ${D(LimbDark.KK)}, ${D(4e-4)}))"
+
+  /** boxGuessQ as SQL, ending in gx(ener, g0, g1, …): the deepest
+    * CIRCULAR window of 2h+1 integer yq sums over `nb` bins
+    * (first-index tiebreak) gives the epoch g1 and — unless `g0`
+    * replaces it — the depth g0; `rest` lists the columns from g2 on. */
+  private def windowGxSql(nb: Int = 200, h: Int = 14, g0: Option[String] = None,
+      rest: String = s"${D(1.0)} AS g2"): String =
+    s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
+       |  FROM bins c
+       |  CROSS JOIN (SELECT unnest(range(-$h, ${h + 1})) AS kk) o
+       |  JOIN bins b2 ON b2.ener = c.ener
+       |    AND b2.b = ((c.b + o.kk) % $nb + $nb) % $nb
+       |  GROUP BY 1, 2),
+       |best AS (SELECT ener, c, w FROM (
+       |    SELECT ener, c, w,
+       |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
+       |    FROM gw) WHERE rw = 1),
+       |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
+       |gx AS (SELECT best.ener AS ener,
+       |    ${g0.getOrElse(windowDepthSql(nb, h))} AS g0,
+       |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / $nb >= 3.5
+       |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / $nb - 7.0
+       |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / $nb END AS g1,
+       |    $rest
+       |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
+
+  /** t13f's basis literals as the `rvb` CTE (t13f, t13h). */
+  private lazy val rvbCteSql = "\nrvb AS (SELECT * FROM (VALUES " +
+    rvBasis.map { case (b, sq, cq) => s"($b, $sq, $cq)" }.mkString(", ") +
+    ") AS t(b, sq, cq)),"
   /** t13c's correlated-baseline wiggle over the 200 phase bins: a
     * circular 8-bin moving sum of per-bin LCG draws — integer closed
     * form shared verbatim by both engines, correlated over ~8 bins
@@ -1677,35 +1490,6 @@ object Advanced {
       1e6 / (2 * sInn))
   }
 
-  /** t13's fixture + the wiggle: bins(ener, b, tb, y, yq) with
-    * y = binned flux + wig — mirrors the Spark fixture bit-for-bit
-    * (identical literal expression shapes, identical operation
-    * order). */
-  private def t13cFixtureSql: String = {
-    val wig = t13cWigSql("b")
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |fl AS (SELECT ener, ph,
-       |    1.0 - (CASE WHEN ph < 43200000000 OR ph > 561600000000
-       |                THEN CAST(0.03 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-       |        + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM gn),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6
-       |      + CAST(($wig) - 4000 AS DOUBLE) * CAST(1.25e-6 AS DOUBLE) AS y,
-       |    CAST(round((CAST(sv AS DOUBLE) / n / 1e6
-       |      + CAST(($wig) - 4000 AS DOUBLE) * CAST(1.25e-6 AS DOUBLE)) * 1e9)
-       |      AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
-
   /** t13l's injected Matérn-3/2 wiggle: a truncated-MA(64) integer
     * closed form at the KNOWN (σ=2e-3, ρ=0.25 d) over Ensemble.draw
     * draws (GpHyper.injectionWeights/wigQ), quantized at 1e-9 flux —
@@ -1716,50 +1500,60 @@ object Advanced {
     (0L until 200L).map(b => (b, graft.model.GpHyper.wigQ(b, wq)))
   }
 
-  /** t13l's fixture: t13's grid + noise with a BIN-ALIGNED box
-    * (half-dur 0.525 d = 15 bins exactly — edge bins fully in/out, so
-    * no partial-bin spike the GP must explain as ρ→0) plus the
-    * literal wiggle, in 1e-9 flux units. Mirrors the Spark fixture
-    * bit-for-bit. */
-  private def t13lFixtureSql: String = {
-    val wigVals = t13lWig.map { case (b, v) => s"($b, $v)" }.mkString(", ")
-    s"""wigt AS (SELECT * FROM (VALUES $wigVals) AS t(wb, wv)),
-       |e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
+  /** The LCG noise of every t13 fixture as SQL — [[lcgNoise]]'s
+    * expression, so both engines draw the same doubles. */
+  private def noiseSql(amp: Double): String =
+    s"(CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * $amp"
+
+  /** The default select list of the `bins` CTE: bin center `tb`, mean
+    * value `y` at quantum `q` and its 1e9-quantized `yq`. */
+  private val tbSql = "    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,\n"
+  private def binsYSql(q: String): String =
+    s"""    CAST(sv AS DOUBLE) / n / $q AS y,
+       |    CAST(round(CAST(sv AS DOUBLE) / n / $q * 1e9) AS BIGINT) AS yq
+       |  FROM bnr)""".stripMargin
+
+  /** The oracle's copy of [[t13Fold]]: the `e0` anchor, the `gn` grid
+    * over `eners` (i, LCG draw r, 7-d phase ph), the caller's injection
+    * CTEs `flux` ending in fl(ener, ph, flux) — rv(ener, ph, v) in m/s
+    * at a 1e3 quantum when `rv` — then the quantized per-bin sums `bnr`
+    * and `bins` (by default (ener, b, tb, y, yq); `bins` replaces the
+    * select list after `ener, b`). `lits` are literal-table CTEs placed
+    * after the anchor; `r` is the per-point draw (t13b salts it by
+    * ener). Identical literal expression shapes and operation order to
+    * the Spark fixture, so the binned values match bit-for-bit. */
+  private def t13GridSql(flux: String, lits: String = "",
+      r: String = "(i % 65536 * 1103515245 + 12345) % 2147483648",
+      rv: Boolean = false, bins: Option[String] = None): String = {
+    val (src, v, q) = if (rv) ("rv", "v", "1e3") else ("fl", "flux", "1e6")
+    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
+       |${lits}gn AS (SELECT en.ener AS ener, ii.i AS i,
+       |    $r AS r,
        |    (ii.i * 648000000) % 604800000000 AS ph
        |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |fl AS (SELECT ener, ph,
-       |    1.0 - (CASE WHEN ph < 45360000000 OR ph > 559440000000
-       |                THEN CAST(0.03 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-       |        + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM gn),
+       |""".stripMargin + flux +
+    s""",
        |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
+       |    CAST(sum(CAST(round($v * $q) AS BIGINT)) AS BIGINT) AS sv
+       |  FROM $src GROUP BY 1, 2),
        |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6
-       |      + CAST(wv AS DOUBLE) * CAST(1e-9 AS DOUBLE) AS y,
-       |    CAST(round((CAST(sv AS DOUBLE) / n / 1e6
-       |      + CAST(wv AS DOUBLE) * CAST(1e-9 AS DOUBLE)) * 1e9) AS BIGINT) AS yq
-       |  FROM bnr JOIN wigt ON wigt.wb = bnr.b)""".stripMargin
+       |""".stripMargin + bins.getOrElse(tbSql + binsYSql(q))
   }
 
-  /** t13d's fixture: t13's grid + noise with the box dip replaced by
-    * the injected limb-darkened transit — the LD layers are the SAME
-    * per-layer SQL strings the Spark fixture names as columns
-    * (model/LimbDark.scala), so both engines spell one arithmetic
-    * DAG. */
-  private def t13dFixtureSql: String = {
-    import graft.model.LimbDark
+  /** [[boxFlux]] as the `fl` CTE: 1 − a box of half-width `half` µs at
+    * phase 0 and depth `depth`, plus the LCG noise. */
+  private def boxFlSql(half: Long, depth: String = "CAST(0.03 AS DOUBLE)"): String =
+    s"""fl AS (SELECT ener, ph,
+       |    1.0 - (CASE WHEN ph < $half OR ph > ${P7 - half}
+       |                THEN $depth ELSE CAST(0.0 AS DOUBLE) END)
+       |        + ${noiseSql(0.004)} AS flux
+       |  FROM gn)""".stripMargin
+
+  /** [[ldLayers]] as CTEs ap, l1..l3 — the same per-layer SQL strings,
+    * so both engines spell one arithmetic DAG. */
+  private def ldLayersSql: String = {
     val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |ap AS (SELECT ener, ph, r,
+    s"""ap AS (SELECT ener, ph, r,
        |    CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END AS aph
        |  FROM (SELECT ener, ph, r, CAST(ph AS DOUBLE) / 86400e6 AS phd
        |        FROM gn) pd),
@@ -1767,212 +1561,77 @@ object Advanced {
        |l2 AS (SELECT ener, ph, r, hu, ${LimbDark.zSql("hu", PT)} AS z FROM l1),
        |l3 AS (SELECT ener, ph, r, hu,
        |    ${LimbDark.lamSql("z", PT)} AS lam,
-       |    ${LimbDark.muSql("z", PT)} AS mu FROM l2),
+       |    ${LimbDark.muSql("z", PT)} AS mu FROM l2)""".stripMargin
+  }
+
+  /** t13d's (and t13j's) fixture: [[ldTransit]] on the shared grid. */
+  private def t13dFixtureSql: String = t13GridSql(
+    s"""$ldLayersSql,
        |l4 AS (SELECT ener, ph, r, hu, lam, ${LimbDark.izSql("mu")} AS iz FROM l3),
        |fl AS (SELECT ener, ph,
-       |    ${LimbDark.fluxSql("hu", PT, "iz", "lam")}
-       |      + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM l4),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
+       |    ${LimbDark.fluxSql("hu", LimbDark.D(0.15), "iz", "lam")}
+       |      + ${noiseSql(0.004)} AS flux
+       |  FROM l4)""".stripMargin)
 
   /** t13g's fixture: t13d's shape with the INJECTED LD coefficients
     * (u1=0.6, u2=0.1) spelled through the parametrized layer strings
     * — identical per-layer SQL to the Spark fixture columns. */
   private def t13gFixtureSql: String = {
-    import graft.model.LimbDark
-    val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
     val U1I = LimbDark.D(0.6); val U2I = LimbDark.D(0.1)
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |ap AS (SELECT ener, ph, r,
-       |    CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END AS aph
-       |  FROM (SELECT ener, ph, r, CAST(ph AS DOUBLE) / 86400e6 AS phd
-       |        FROM gn) pd),
-       |l1 AS (SELECT ener, ph, r, ${LimbDark.huSql("aph", TT)} AS hu FROM ap),
-       |l2 AS (SELECT ener, ph, r, hu, ${LimbDark.zSql("hu", PT)} AS z FROM l1),
-       |l3 AS (SELECT ener, ph, r, hu,
-       |    ${LimbDark.lamSql("z", PT)} AS lam,
-       |    ${LimbDark.muSql("z", PT)} AS mu FROM l2),
-       |l4 AS (SELECT ener, ph, r, hu, lam,
-       |    ${LimbDark.izSqlU("mu", U1I, U2I)} AS iz,
-       |    ${LimbDark.om4SqlU(U1I, U2I)} AS om4 FROM l3),
-       |fl AS (SELECT ener, ph,
-       |    ${LimbDark.fluxSqlU("hu", PT, "iz", "lam", "om4")}
-       |      + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM l4),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
+    t13GridSql(
+      s"""$ldLayersSql,
+         |l4 AS (SELECT ener, ph, r, hu, lam,
+         |    ${LimbDark.izSqlU("mu", U1I, U2I)} AS iz,
+         |    ${LimbDark.om4SqlU(U1I, U2I)} AS om4 FROM l3),
+         |fl AS (SELECT ener, ph,
+         |    ${LimbDark.fluxSqlU("hu", LimbDark.D(0.15), "iz", "lam", "om4")}
+         |      + ${noiseSql(0.004)} AS flux
+         |  FROM l4)""".stripMargin)
   }
 
   /** t13e's fixture: t13's grid + noise with BOTH planets' LD dips
     * (additive, commensurate periods) — layer strings shared with the
     * Spark fixture columns. */
   private def t13eFixtureSql: String = {
-    import graft.model.LimbDark
     val PA = LimbDark.D(0.15); val TA = LimbDark.D(1.0)
     val PB = LimbDark.D(0.11); val TB = LimbDark.D(0.5)
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |ap AS (SELECT ener, ph, r,
-       |    CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END AS aph_a,
-       |    abs((phd - 1.2 + 1.75) % 3.5 - 1.75) AS aph_b
-       |  FROM (SELECT ener, ph, r, CAST(ph AS DOUBLE) / 86400e6 AS phd
-       |        FROM gn) pd),
-       |l1 AS (SELECT ener, ph, r,
-       |    ${LimbDark.huSql("aph_a", TA)} AS hu_a,
-       |    ${LimbDark.huSql("aph_b", TB)} AS hu_b FROM ap),
-       |l2 AS (SELECT ener, ph, r, hu_a, hu_b,
-       |    ${LimbDark.zSql("hu_a", PA)} AS z_a,
-       |    ${LimbDark.zSql("hu_b", PB)} AS z_b FROM l1),
-       |l3 AS (SELECT ener, ph, r, hu_a, hu_b,
-       |    ${LimbDark.lamSql("z_a", PA)} AS lam_a,
-       |    ${LimbDark.muSql("z_a", PA)} AS mu_a,
-       |    ${LimbDark.lamSql("z_b", PB)} AS lam_b,
-       |    ${LimbDark.muSql("z_b", PB)} AS mu_b FROM l2),
-       |l4 AS (SELECT ener, ph, r, hu_a, hu_b, lam_a, lam_b,
-       |    ${LimbDark.izSql("mu_a")} AS iz_a,
-       |    ${LimbDark.izSql("mu_b")} AS iz_b FROM l3),
-       |fl AS (SELECT ener, ph,
-       |    ${LimbDark.fluxSql("hu_a", PA, "iz_a", "lam_a")}
-       |      + ${LimbDark.fluxSql("hu_b", PB, "iz_b", "lam_b")} - 1.0
-       |      + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM l4),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
+    t13GridSql(
+      s"""ap AS (SELECT ener, ph, r,
+         |    CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END AS aph_a,
+         |    abs((phd - 1.2 + 1.75) % 3.5 - 1.75) AS aph_b
+         |  FROM (SELECT ener, ph, r, CAST(ph AS DOUBLE) / 86400e6 AS phd
+         |        FROM gn) pd),
+         |l1 AS (SELECT ener, ph, r,
+         |    ${LimbDark.huSql("aph_a", TA)} AS hu_a,
+         |    ${LimbDark.huSql("aph_b", TB)} AS hu_b FROM ap),
+         |l2 AS (SELECT ener, ph, r, hu_a, hu_b,
+         |    ${LimbDark.zSql("hu_a", PA)} AS z_a,
+         |    ${LimbDark.zSql("hu_b", PB)} AS z_b FROM l1),
+         |l3 AS (SELECT ener, ph, r, hu_a, hu_b,
+         |    ${LimbDark.lamSql("z_a", PA)} AS lam_a,
+         |    ${LimbDark.muSql("z_a", PA)} AS mu_a,
+         |    ${LimbDark.lamSql("z_b", PB)} AS lam_b,
+         |    ${LimbDark.muSql("z_b", PB)} AS mu_b FROM l2),
+         |l4 AS (SELECT ener, ph, r, hu_a, hu_b, lam_a, lam_b,
+         |    ${LimbDark.izSql("mu_a")} AS iz_a,
+         |    ${LimbDark.izSql("mu_b")} AS iz_b FROM l3),
+         |fl AS (SELECT ener, ph,
+         |    ${LimbDark.fluxSql("hu_a", PA, "iz_a", "lam_a")}
+         |      + ${LimbDark.fluxSql("hu_b", PB, "iz_b", "lam_b")} - 1.0
+         |      + ${noiseSql(0.004)} AS flux
+         |  FROM l4)""".stripMargin)
   }
 
-  /** t13f's fixture: the t13 grid with an injected linear-harmonic RV
-    * curve (γ + A·s + B·c from the shared rvb basis literals) + t13's
-    * LCG noise at ±2 m/s, quantized at 1e3 (mm/s) into 200 fold
-    * bins. */
-  private def t13fFixtureSql: String =
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |rv AS (SELECT ener, ph,
-       |    CAST(12.5 AS DOUBLE) + CAST(8.0 AS DOUBLE) * (w.sq / 1e6)
-       |      + CAST(-5.0 AS DOUBLE) * (w.cq / 1e6)
-       |      + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 4.0 AS v
-       |  FROM gn JOIN rvb w ON w.b = (ph * 200) // 604800000000),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(v * 1e3) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM rv GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    CAST(sv AS DOUBLE) / n / 1e3 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e3 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-
-  /** t13h's fixture: t13f's grid + noise with the injected ECCENTRIC
-    * curve joined from the t13hTrue literals (the fixture is data —
-    * quantized; the fit model is raw-double). `bins` carries tb so
-    * the llq derives each bin's mean anomaly in-place. */
-  private def t13hFixtureSql: String = {
-    val vals = t13hTrue.map { case (b, vq) => s"($b, $vq)" }.mkString(", ")
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |rvt AS (SELECT * FROM (VALUES $vals) AS t(b, vq)),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |rv AS (SELECT ener, ph,
-       |    w.vq / 1e6 + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 4.0 AS v
-       |  FROM gn JOIN rvt w ON w.b = (ph * 200) // 604800000000),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(v * 1e3) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM rv GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e3 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e3 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
-
-  /** t13i's fixture: t13's grid + noise with the injected EXACT-model
-    * curve joined from the t13iTrue literals (the fixture is data —
-    * quantized at 1e9; the FIT models stay raw-double). */
-  private def t13iFixtureSql: String = literalCurveFixtureSql(t13iTrue)
-
-  /** t13k's fixture: same data-literal shape over the injected flare
-    * curve. */
-  private def t13kFixtureSql: String = literalCurveFixtureSql(t13kTrue)
-
-  /** Shared "fixture is data" flux fixture: a 1e9-quantized true
-    * curve at the 200 fold-bin centers joined onto t13's grid + LCG
-    * noise, binned with t13's 1e6 flux quantization. */
+  /** Shared "fixture is data" flux fixture (t13i, t13k): a
+    * 1e9-quantized true curve at the 200 fold-bin centers joined onto
+    * t13's grid + LCG noise, binned with t13's 1e6 flux quantization. */
   private def literalCurveFixtureSql(trueVals: Seq[(Long, Long)]): String = {
     val vals = trueVals.map { case (b, q) => s"($b, $q)" }.mkString(", ")
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |ftr AS (SELECT * FROM (VALUES $vals) AS t(b, fxq)),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |fl AS (SELECT ener, ph,
-       |    w.fxq / 1e9 + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM gn JOIN ftr w ON w.b = (ph * 200) // 604800000000),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
-
-  private def t13FixtureSql(perEner: Boolean): String = {
-    val rExpr =
-      if (perEner) "((i + ener * 7919) % 65536 * 1103515245 + 12345) % 2147483648"
-      else "(i % 65536 * 1103515245 + 12345) % 2147483648"
-    val depthExpr =
-      if (perEner) "CAST(0.015 AS DOUBLE) + ener * CAST(0.003 AS DOUBLE)"
-      else "CAST(0.03 AS DOUBLE)"
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    $rExpr AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |fl AS (SELECT ener, ph,
-       |    1.0 - (CASE WHEN ph < 43200000000 OR ph > 561600000000
-       |                THEN $depthExpr ELSE CAST(0.0 AS DOUBLE) END)
-       |        + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM gn),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
+    t13GridSql(
+      s"""fl AS (SELECT ener, ph,
+         |    w.fxq / 1e9 + ${noiseSql(0.004)} AS flux
+         |  FROM gn JOIN ftr w ON w.b = (ph * 200) // 604800000000)""".stripMargin,
+      lits = s"ftr AS (SELECT * FROM (VALUES $vals) AS t(b, fxq)),\n")
   }
 
   /** t13m's injected per-transit timing offsets (µs), k = 1..4:
@@ -2003,7 +1662,7 @@ object Advanced {
        |fl AS (SELECT ener, off,
        |    1.0 - (CASE WHEN abs(off - ttv) < 43200000000
        |                THEN CAST(0.03 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-       |        + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
+       |        + ${noiseSql(0.004)} AS flux
        |  FROM gn),
        |bnr AS (SELECT ener,
        |    ((off + 756000000000) % 604800000000 * 500) // 604800000000 AS b,
@@ -2017,71 +1676,68 @@ object Advanced {
        |  FROM bnr)""".stripMargin
   }
 
+  /** The three Ensemble.percentiles levels (0.16, 0.5, 0.84) read off
+    * one pc<d> CTE's rows. */
+  private val pctSql = Seq("max(CASE WHEN q < 0.3 THEN v END)",
+    "max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END)", "max(CASE WHEN q > 0.7 THEN v END)")
+
+  /** Per-fit columns <name>_p16/_p50/_p84 (t13b, t13m). */
+  private def pctColsSql(name: String): String =
+    pctSql.zip(Seq("p16", "p50", "p84"))
+      .map { case (e, p) => s"$e AS ${name}_$p" }.mkString(",\n    ")
+
+  /** The oracle's copy of [[walkRows]]: the acceptance row, then one
+    * percentile row per walk dimension in `param` order, as UNION ALL
+    * arms indented by `ind`. */
+  private def walkRowsSql(dims: Seq[String], sfx: String = "", ind: String = "  "): String =
+    (s"SELECT 'acceptance$sfx' AS param, a AS p16, a AS p50, a AS p84 FROM accr" +:
+      dims.zipWithIndex.sortBy(_._1).map { case (nm, j) =>
+        s"SELECT '$nm$sfx', ${pctSql.mkString(s",\n$ind    ")} FROM pc$j" })
+      .mkString(ind, s"\n${ind}UNION ALL\n$ind", "")
+
+  /** The oracle's copy of [[posterior]] for a one-walk query: the
+    * sampler CTEs, then the posterior table ordered by param. */
+  private def posteriorSql(sampler: String, dims: Seq[String]): String =
+    s"$sampler\nSELECT * FROM (\n${walkRowsSql(dims)}\n) ORDER BY param"
+
+  /** The one-fit `eners` row of the single-fit oracles. */
+  private val oneFit = "SELECT CAST(0 AS BIGINT) AS ener"
+
   val oracle: Map[String, String] = Map(
     "t13_mcmc_fit" ->
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13FixtureSql(perEner = false), 42L)}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'depth', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |) ORDER BY param""".stripMargin,
+      posteriorSql(mcmcSamplerSql(oneFit, t13GridSql(boxFlSql(PDAY / 2)), 42L),
+        boxDims),
 
     // The GP walk replay: same recursive sampler CTE, the likelihood
     // subquery swapped for the steady-state innovation filter — the
     // lag-weight table arrives as the SAME integer literals the
     // engine derived (t13cGp), so the filter is exact int64 in both
     // engines and the per-proposal evaluation is one 200×≤32
-    // join+aggregate.
+    // join+aggregate. The fixture adds the wiggle to each bin mean.
     "t13c_mcmc_gp" -> {
       val (cq, scale) = t13cGp
-      def D(x: Double) = s"CAST($x AS DOUBLE)"
       val wtsVals = cq.zipWithIndex
         .map { case (c, i) => s"(${i + 1}, $c)" }.mkString(", ")
-      val gpLlq: (String, String) => String = (al, p) => {
-        def mdl2(ba: String) =
-          s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod($ba.tb - $al.${p}1 + 3.5, 7.0) - 3.5)" +
-          s" < $al.${p}2 / 2 THEN ${D(1.0)} ELSE ${D(0.0)} END))"
-        def rq(ba: String) =
-          s"CAST(round(($ba.y - ${mdl2(ba)}) * 1e8) AS BIGINT)"
+      val gpLlq: (String, String) => String = (al, p) =>
         s"(SELECT CAST(-sum(CAST(round((CAST(nuq AS DOUBLE) / 1e14)" +
         s" * (CAST(nuq AS DOUBLE) / 1e14) * ${D(scale)}) AS BIGINT)) AS BIGINT)" +
-        s" FROM (SELECT max(${rq("bb")}) * 1000000" +
-        s" - coalesce(CAST(sum(w.cq * ${rq("b2")}) AS BIGINT), 0) AS nuq" +
+        s" FROM (SELECT max(${boxResidSql(al, p, "bb")}) * 1000000" +
+        s" - coalesce(CAST(sum(w.cq * ${boxResidSql(al, p, "b2")}) AS BIGINT), 0) AS nuq" +
         s" FROM bins bb LEFT JOIN wts w ON w.l <= bb.b" +
         s" LEFT JOIN bins b2 ON b2.ener = bb.ener AND b2.b = bb.b - w.l" +
         s" WHERE bb.ener = $al.ener GROUP BY bb.b) nn)"
-      }
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13cFixtureSql, 42L, nW = 50, nSteps = 60,
-                           llqGen = Some(gpLlq),
-                           extraCte = s"""
-wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'depth', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |) ORDER BY param""".stripMargin
+      val wig = t13cWigSql("b")
+      val fixture = t13GridSql(boxFlSql(PDAY / 2), bins = Some(
+        s"""$tbSql    CAST(sv AS DOUBLE) / n / 1e6
+           |      + CAST(($wig) - 4000 AS DOUBLE) * CAST(1.25e-6 AS DOUBLE) AS y,
+           |    CAST(round((CAST(sv AS DOUBLE) / n / 1e6
+           |      + CAST(($wig) - 4000 AS DOUBLE) * CAST(1.25e-6 AS DOUBLE)) * 1e9)
+           |      AS BIGINT) AS yq
+           |  FROM bnr)""".stripMargin))
+      posteriorSql(mcmcSamplerSql(oneFit, fixture, 42L, nW = 50, nSteps = 60,
+          llqGen = Some(gpLlq),
+          extraCte = s"\nwts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),"),
+        boxDims)
     },
 
     // The LD walk replay: same recursive sampler CTE; the likelihood
@@ -2091,39 +1747,13 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
     // engine's layered columns and Ensemble.ldBoxLlq bit-for-bit);
     // the guess converts window depth to a radius ratio with the
     // identical √/max shape the Scala side applies after boxGuessQ.
-    "t13d_mcmc_ld" -> {
-      import graft.model.LimbDark
-      val ldLlq: (String, String) => String = (al, p) => {
-        val aph = s"abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5)"
-        s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
-        s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
-        LimbDark.fluxInlineSql(aph, s"$al.${p}0", s"$al.${p}2") +
-        s" AS mm FROM bins bb WHERE bb.ener = $al.ener) qq)"
-      }
-      val g0 = s"sqrt(GREATEST($mcmcDepthG0 * ${LimbDark.D(LimbDark.KK)}, " +
-        s"${LimbDark.D(4e-4)}))"
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13dFixtureSql, 42L,
-                           llqGen = Some(ldLlq),
-                           los = Seq(0.02, -3.5, 0.2),
-                           his = Seq(0.45, 3.5, 2.0),
-                           g0Sql = Some(g0))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'rrat', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |) ORDER BY param""".stripMargin
-    },
+    "t13d_mcmc_ld" ->
+      posteriorSql(mcmcSamplerSql(oneFit, t13dFixtureSql, 42L,
+          llqGen = Some(ldLlqSql),
+          los = Seq(0.02, -3.5, 0.2),
+          his = Seq(0.45, 3.5, 2.0),
+          g0Sql = Some(ldG0Sql)),
+        ldDims),
 
     // The 5-dimensional LD-coefficient walk replay (r9): the same
     // recursive sampler with the PARAMETRIZED limb-darkened model
@@ -2131,7 +1761,6 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
     // and a gx block seeding the coefficients at the mid-prior
     // constants.
     "t13g_mcmc_ldfit" -> {
-      import graft.model.LimbDark
       val ldLlq: (String, String) => String = (al, p) => {
         val aph = s"abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5)"
         s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
@@ -2140,56 +1769,13 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
           s"$al.${p}3", s"$al.${p}4") +
         s" AS mm FROM bins bb WHERE bb.ener = $al.ener) qq)"
       }
-      val gxBlock =
-        s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-           |  FROM bins c
-           |  CROSS JOIN (SELECT unnest(range(-14, 15)) AS kk) o
-           |  JOIN bins b2 ON b2.ener = c.ener
-           |    AND b2.b = ((c.b + o.kk) % 200 + 200) % 200
-           |  GROUP BY 1, 2),
-           |best AS (SELECT ener, c, w FROM (
-           |    SELECT ener, c, w,
-           |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-           |    FROM gw) WHERE rw = 1),
-           |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-           |gx AS (SELECT best.ener AS ener,
-           |    sqrt(GREATEST($mcmcDepthG0 * ${LimbDark.D(LimbDark.KK)}, ${LimbDark.D(4e-4)})) AS g0,
-           |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
-           |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
-           |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-           |    ${LimbDark.D(1.0)} AS g2,
-           |    ${LimbDark.D(LimbDark.U1)} AS g3,
-           |    ${LimbDark.D(LimbDark.U2)} AS g4
-           |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13gFixtureSql, 42L, nW = 50, nSteps = 300,
-                           llqGen = Some(ldLlq),
-                           los = Seq(0.02, -3.5, 0.2, 0.0, -0.3),
-                           his = Seq(0.45, 3.5, 2.0, 1.2, 0.7),
-                           gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'rrat', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'u1', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc3
-         |  UNION ALL
-         |  SELECT 'u2', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc4
-         |) ORDER BY param""".stripMargin
+      posteriorSql(mcmcSamplerSql(oneFit, t13gFixtureSql, 42L, nW = 50, nSteps = 300,
+          llqGen = Some(ldLlq),
+          los = Seq(0.02, -3.5, 0.2, 0.0, -0.3),
+          his = Seq(0.45, 3.5, 2.0, 1.2, 0.7),
+          gxBlockSql = Some(windowGxSql(g0 = Some(ldG0Sql),
+            rest = s"${D(1.0)} AS g2,\n    ${D(LimbDark.U1)} AS g3,\n    ${D(LimbDark.U2)} AS g4"))),
+        t13gDims)
     },
 
     // The 4-dimensional two-planet walk replay: the nd-generalized
@@ -2197,7 +1783,6 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
     // custom two-window gx block (deepest window = planet a; deepest
     // window at circular distance > 28 bins = planet b).
     "t13e_mcmc_ld2" -> {
-      import graft.model.LimbDark
       val ld2: (String, String) => String = (al, p) => {
         val aphA = s"abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5)"
         val aphB = s"abs(fmod(bb.tb - $al.${p}3 + 1.75, 3.5) - 1.75)"
@@ -2238,40 +1823,19 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
            |    fmod((CAST(b2w.c AS DOUBLE) + 0.5) * 7.0 / 200 + 1.75, 3.5) - 1.75 AS g3
            |  FROM b1 JOIN b2w ON b2w.ener = b1.ener
            |  JOIN sall ON sall.ener = b1.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13eFixtureSql, 42L, nW = 50, nSteps = 300,
-                           llqGen = Some(ld2),
-                           los = Seq(0.02, -3.5, 0.02, -1.75),
-                           his = Seq(0.45, 3.5, 0.45, 1.75),
-                           gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'epoch_a', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'epoch_b', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc3
-         |  UNION ALL
-         |  SELECT 'rrat_a', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'rrat_b', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |) ORDER BY param""".stripMargin
+      posteriorSql(mcmcSamplerSql(oneFit, t13eFixtureSql, 42L, nW = 50, nSteps = 300,
+          llqGen = Some(ld2),
+          los = Seq(0.02, -3.5, 0.02, -1.75),
+          his = Seq(0.45, 3.5, 0.45, 1.75),
+          gxBlockSql = Some(gxBlock)),
+        t13eDims)
     },
 
     // The RV walk replay: the same recursive sampler CTE with the
     // linear-harmonic likelihood (basis joined from the SAME rvb
     // literals the engine derived) and the exact Fourier-projection
-    // gx block.
+    // gx block. The fixture injects γ + A·s + B·c from the same basis.
     "t13f_mcmc_rv" -> {
-      val rvbVals = rvBasis
-        .map { case (b, sq, cq) => s"($b, $sq, $cq)" }.mkString(", ")
       val rvLlq: (String, String) => String = (al, p) =>
         s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 7.4e6)" +
         s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
@@ -2289,36 +1853,29 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
           |    2.0 * (CAST(ps AS DOUBLE) / 200 / 1e15) AS g1,
           |    2.0 * (CAST(pc AS DOUBLE) / 200 / 1e15) AS g2
           |  FROM sall JOIN proj ON proj.ener = sall.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13fFixtureSql, 42L,
-                           llqGen = Some(rvLlq),
-                           extraCte = s"""
-rvb AS (SELECT * FROM (VALUES $rvbVals) AS t(b, sq, cq)),""",
-                           los = Seq(0.0, -15.0, -15.0),
-                           his = Seq(25.0, 15.0, 15.0),
-                           gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'amp_cos', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'amp_sin', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'gamma', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |) ORDER BY param""".stripMargin
+      val fixture = t13GridSql(
+        s"""rv AS (SELECT ener, ph,
+           |    CAST(12.5 AS DOUBLE) + CAST(8.0 AS DOUBLE) * (w.sq / 1e6)
+           |      + CAST(-5.0 AS DOUBLE) * (w.cq / 1e6)
+           |      + ${noiseSql(4.0)} AS v
+           |  FROM gn JOIN rvb w ON w.b = (ph * 200) // 604800000000)""".stripMargin,
+        rv = true, bins = Some(binsYSql("1e3")))
+      posteriorSql(mcmcSamplerSql(oneFit, fixture, 42L,
+          llqGen = Some(rvLlq),
+          extraCte = rvbCteSql,
+          los = Seq(0.0, -15.0, -15.0),
+          his = Seq(25.0, 15.0, 15.0),
+          gxBlockSql = Some(gxBlock)),
+        rvDims)
     },
 
     // The eccentric-RV walk replay (r9): the nd sampler with the
     // Kepler model expanded as NESTED named-layer subqueries (8
     // Newton steps × 3 layers + the ω-trig/RV close — no textual
     // explosion; model/Kepler.rvNestedSql) and a gx block that scores
-    // the ω-candidate grid with the same integer llq.
+    // the ω-candidate grid with the same integer llq. The fixture
+    // joins the injected curve from the t13hTrue literals (the
+    // fixture is data — quantized; the fit model is raw-double).
     "t13h_mcmc_rvecc" -> {
       import graft.model.Kepler
       def modelLlq(gamma: String, kAmp: String, e: String, omega: String,
@@ -2362,34 +1919,19 @@ rvb AS (SELECT * FROM (VALUES $rvbVals) AS t(b, sq, cq)),""",
            |gx AS (SELECT g.ener AS ener, g.gg AS g0, g.kk AS g1,
            |    ${Kepler.D(0.1)} AS g2, wbest.w AS g3
            |  FROM g0k g JOIN wbest ON wbest.ener = g.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13hFixtureSql, 42L, nW = 50, nSteps = 300,
-                           llqGen = Some(eccLlq),
-                           extraCte = s"""
-rvb AS (SELECT * FROM (VALUES ${rvBasis
-        .map { case (b, sq, cq) => s"($b, $sq, $cq)" }.mkString(", ")}) AS t(b, sq, cq)),""",
-                           los = Seq(0.0, 0.0, 0.0, -Kepler.PI),
-                           his = Seq(25.0, 20.0, 0.6, Kepler.PI),
-                           gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'ecc', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'gamma', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'k_amp', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'omega', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc3
-         |) ORDER BY param""".stripMargin
+      val vals = t13hTrue.map { case (b, vq) => s"($b, $vq)" }.mkString(", ")
+      val fixture = t13GridSql(
+        s"""rv AS (SELECT ener, ph,
+           |    w.vq / 1e6 + ${noiseSql(4.0)} AS v
+           |  FROM gn JOIN rvt w ON w.b = (ph * 200) // 604800000000)""".stripMargin,
+        lits = s"rvt AS (SELECT * FROM (VALUES $vals) AS t(b, vq)),\n", rv = true)
+      posteriorSql(mcmcSamplerSql(oneFit, fixture, 42L, nW = 50, nSteps = 300,
+          llqGen = Some(eccLlq),
+          extraCte = rvbCteSql,
+          los = Seq(0.0, 0.0, 0.0, -Kepler.PI),
+          his = Seq(25.0, 20.0, 0.6, Kepler.PI),
+          gxBlockSql = Some(gxBlock)),
+        t13hDims)
     },
 
     // The exact-occultation walk replay (r10): TWO complete sampler
@@ -2403,7 +1945,7 @@ rvb AS (SELECT * FROM (VALUES ${rvBasis
     // is the bit-identical double chain Ensemble.ldxLlq runs on the
     // driver. The approx block is byte-for-byte t13d's inline llq.
     "t13i_mcmc_ldx" -> {
-      import graft.model.{LimbDark, LimbDarkExact => LX}
+      import graft.model.{LimbDarkExact => LX}
       val nodesCte = s"""
 nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
       val ldxLlq: (String, String) => String = (al, p) => {
@@ -2430,44 +1972,19 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
         q = s"SELECT yy, ${LX.fluxSql("hu", "ain", "sq")} AS fx FROM ($q) x16"
         s"(SELECT CAST(-sum(CAST(round((yy - fx) * (yy - fx) * 3.125e12) AS BIGINT)) AS BIGINT) FROM ($q) x17)"
       }
-      val ldaLlq: (String, String) => String = (al, p) => {
-        val aph = s"abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5)"
-        s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
-        s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
-        LimbDark.fluxInlineSql(aph, s"$al.${p}0", s"$al.${p}2") +
-        s" AS mm FROM bins bb WHERE bb.ener = $al.ener) qq)"
-      }
-      val g0 = s"sqrt(GREATEST($mcmcDepthG0 * ${LimbDark.D(LimbDark.KK)}, " +
-        s"${LimbDark.D(4e-4)}))"
-      def rowsFor(sfx: String) =
-        s"""SELECT 'acceptance_$sfx' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-           |UNION ALL
-           |SELECT 'dur_$sfx', max(CASE WHEN q < 0.3 THEN v END),
-           |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-           |    max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-           |UNION ALL
-           |SELECT 'epoch_$sfx', max(CASE WHEN q < 0.3 THEN v END),
-           |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-           |    max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-           |UNION ALL
-           |SELECT 'rrat_$sfx', max(CASE WHEN q < 0.3 THEN v END),
-           |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-           |    max(CASE WHEN q > 0.7 THEN v END) FROM pc0""".stripMargin
       def block(llq: (String, String) => String, extra: String, sfx: String) =
-        s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                             t13iFixtureSql, 42L, nW = 50, nSteps = 150,
-                             llqGen = Some(llq), extraCte = extra,
-                             los = Seq(0.02, -3.5, 0.2),
-                             his = Seq(0.45, 3.5, 2.0),
-                             g0Sql = Some(g0))}
-           |${rowsFor(sfx)}""".stripMargin
+        mcmcSamplerSql(oneFit, literalCurveFixtureSql(t13iTrue), 42L, nW = 50, nSteps = 150,
+          llqGen = Some(llq), extraCte = extra,
+          los = Seq(0.02, -3.5, 0.2),
+          his = Seq(0.45, 3.5, 2.0),
+          g0Sql = Some(ldG0Sql)) + "\n" + walkRowsSql(ldDims, sfx, ind = "")
       s"""SELECT * FROM (
          |SELECT * FROM (
-         |${block(ldxLlq, nodesCte, "exact")}
+         |${block(ldxLlq, nodesCte, "_exact")}
          |) qx
          |UNION ALL
          |SELECT * FROM (
-         |${block(ldaLlq, "", "approx")}
+         |${block(ldLlqSql, "", "_approx")}
          |) qa
          |) ORDER BY param""".stripMargin
     },
@@ -2481,22 +1998,11 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
     // sorted lists from 4 per-position rows — op-for-op
     // Ensemble.nelderMeadQ.
     "t13j_opti" -> {
-      import graft.model.LimbDark
       val dims = 0 until 3
       val los = Seq(0.02, -3.5, 0.2); val his = Seq(0.45, 3.5, 2.0)
       val nIter = 120
-      def D(x: Double) = s"CAST($x AS DOUBLE)"
       def clampD(d: Int, v: String) =
         s"LEAST(${D(his(d))}, GREATEST(${D(los(d))}, $v))"
-      def llqAt(a: String, c0: String, c1: String, c2: String) = {
-        val aph = s"abs(fmod(bb.tb - $a.$c1 + 3.5, 7.0) - 3.5)"
-        s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
-        s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
-        LimbDark.fluxInlineSql(aph, s"$a.$c0", s"$a.$c2") +
-        s" AS mm FROM bins bb WHERE bb.ener = $a.ener) qq)"
-      }
-      val g0 = s"sqrt(GREATEST($mcmcDepthG0 * ${LimbDark.D(LimbDark.KK)}, " +
-        s"${LimbDark.D(4e-4)}))"
       // initial simplex: vertex k displaces coordinate k−1 by
       // 0.05·(hi−lo), clamped; others sit at the guess
       def v0(d: Int) =
@@ -2524,29 +2030,12 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
       s"""WITH RECURSIVE
          |eners AS (SELECT CAST(0 AS BIGINT) AS ener),
          |${t13dFixtureSql},
-         |gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-         |  FROM bins c
-         |  CROSS JOIN (SELECT unnest(range(-14, 15)) AS kk) o
-         |  JOIN bins b2 ON b2.ener = c.ener
-         |    AND b2.b = ((c.b + o.kk) % 200 + 200) % 200
-         |  GROUP BY 1, 2),
-         |best AS (SELECT ener, c, w FROM (
-         |    SELECT ener, c, w,
-         |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-         |    FROM gw) WHERE rw = 1),
-         |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-         |gx AS (SELECT best.ener AS ener,
-         |    $g0 AS g0,
-         |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
-         |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
-         |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-         |    ${D(1.0)} AS g2
-         |  FROM best JOIN sall ON sall.ener = best.ener),
+         |${windowGxSql(g0 = Some(ldG0Sql))},
          |sim0 AS (SELECT gx.ener AS ener, p.k AS pos,
          |    ${dims.map(d => s"${v0(d)} AS v$d").mkString(",\n    ")}
          |  FROM gx CROSS JOIN (SELECT unnest(range(0, 4)) AS k) p),
          |sim0l AS (SELECT ener, pos, v0, v1, v2,
-         |    ${llqAt("s0", "v0", "v1", "v2")} AS ll
+         |    ${ldLlqAt("s0", "v0", "v1", "v2")} AS ll
          |  FROM sim0 s0),
          |nm AS (
          |  SELECT ener, 0 AS step,
@@ -2563,7 +2052,7 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
          |        CASE WHEN l7.shrink THEN (CASE WHEN l7.npos = 1 THEN l7.ll1 ELSE l7.sll END)
          |             WHEN l7.npos <= 3 THEN l7.lls[l7.npos] ELSE l7.nll END AS oll
          |    FROM (
-         |      SELECT l6.*, ${llqAt("l6", "sv0", "sv1", "sv2")} AS sll
+         |      SELECT l6.*, ${ldLlqAt("l6", "sv0", "sv1", "sv2")} AS sll
          |      FROM (
          |        SELECT l5.ener AS ener, l5.step AS step, pp.k AS npos,
          |            ${dims.map(d => s"l5.w${d}s AS w${d}s").mkString(", ")}, l5.lls AS lls,
@@ -2578,10 +2067,10 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
          |              CASE WHEN llr > ll1 AND lle > llr THEN lle WHEN llr > ll1 THEN llr
          |                   WHEN llr > ll3 THEN llr WHEN llr > llw THEN llco ELSE llci END AS nll
          |          FROM (
-         |            SELECT l3.*, ${llqAt("l3", "xr0", "xr1", "xr2")} AS llr,
-         |                ${llqAt("l3", "xe0", "xe1", "xe2")} AS lle,
-         |                ${llqAt("l3", "xco0", "xco1", "xco2")} AS llco,
-         |                ${llqAt("l3", "xci0", "xci1", "xci2")} AS llci
+         |            SELECT l3.*, ${ldLlqAt("l3", "xr0", "xr1", "xr2")} AS llr,
+         |                ${ldLlqAt("l3", "xe0", "xe1", "xe2")} AS lle,
+         |                ${ldLlqAt("l3", "xco0", "xco1", "xco2")} AS llco,
+         |                ${ldLlqAt("l3", "xci0", "xci1", "xci2")} AS llci
          |            FROM (
          |              SELECT l2.*,
          |                  $l3cols
@@ -2611,7 +2100,6 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
          |  UNION ALL SELECT 'rrat', w0s[1] FROM res
          |) ORDER BY param""".stripMargin
     },
-
     // The flare-fit walk replay (r10): the nd sampler with the
     // reduction+squaring exp expanded as nested named layers
     // (Flare.expNegNestedSql — walk params enter the inner select as
@@ -2639,27 +2127,12 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
            |    (CAST(pk.b AS DOUBLE) + 0.5) * 7.0 / 200 AS g1,
            |    CAST(0.3 AS DOUBLE) AS g2
            |  FROM pk JOIN sall ON sall.ener = pk.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13kFixtureSql, 42L, nW = 100, nSteps = 100,
-                           llqGen = Some(flareLlq),
-                           los = Seq(0.005, 0.5, 0.05),
-                           his = Seq(0.15, 6.0, 1.0),
-                           gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'amp', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 't0', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'tau', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |) ORDER BY param""".stripMargin
+      posteriorSql(mcmcSamplerSql(oneFit, literalCurveFixtureSql(t13kTrue), 42L,
+          llqGen = Some(flareLlq),
+          los = Seq(0.005, 0.5, 0.05),
+          his = Seq(0.15, 6.0, 1.0),
+          gxBlockSql = Some(gxBlock)),
+        flareDims)
     },
 
     // The GP-hyperparameter walk replay: same recursive sampler CTE;
@@ -2670,24 +2143,20 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
     // per-lag quantized weights expand through a 40-arm CASE over
     // range(1,41), and the log-det joins the accept ratio as
     // 100·round(ln(sinn)·1e6) — the same lnQ6 discipline as the
-    // sampler's own accept draws.
+    // sampler's own accept draws. The fixture: t13's grid with a
+    // BIN-ALIGNED box (half-dur 0.525 d = 15 bins exactly — edge bins
+    // fully in/out, so no partial-bin spike the GP must explain as
+    // ρ→0) plus the literal wiggle, in 1e-9 flux units.
     "t13l_mcmc_gphyper" -> {
-      import graft.model.{GpHyper, Sql}
-      import Sql.D
       val gpLlq: (String, String) => String = (al, p) => {
-        def mdl2(ba: String) =
-          s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod($ba.tb - $al.${p}1 + 3.5, 7.0) - 3.5)" +
-          s" < $al.${p}2 / 2 THEN ${D(1.0)} ELSE ${D(0.0)} END))"
-        def rq(ba: String) =
-          s"CAST(round(($ba.y - ${mdl2(ba)}) * 1e8) AS BIGINT)"
         val hp = GpHyper.chainSql(
           s"SELECT $al.${p}3 AS sg, $al.${p}4 AS rho", Seq.empty)
         val wcase = (1 to GpHyper.NLags)
           .map(l => s"WHEN $l THEN hp.w$l").mkString(" ")
         s"(SELECT CAST(-((SELECT CAST(sum(CAST(round((CAST(nuq AS DOUBLE) / 1e14)" +
         s" * (CAST(nuq AS DOUBLE) / 1e14) * (${D(1e6)} / (2 * hp.sinn))) AS BIGINT)) AS BIGINT)" +
-        s" FROM (SELECT max(${rq("bb")}) * 1000000" +
-        s" - coalesce(CAST(sum(wt.cq * ${rq("b2")}) AS BIGINT), 0) AS nuq" +
+        s" FROM (SELECT max(${boxResidSql(al, p, "bb")}) * 1000000" +
+        s" - coalesce(CAST(sum(wt.cq * ${boxResidSql(al, p, "b2")}) AS BIGINT), 0) AS nuq" +
         s" FROM bins bb" +
         s" LEFT JOIN (SELECT lg.l AS l, CAST(round((CASE lg.l $wcase END)" +
         s" * ${D(1e6)}) AS BIGINT) AS cq" +
@@ -2698,63 +2167,32 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
         s" + 100 * CAST(round(ln(hp.sinn) * 1e6) AS BIGINT)) AS BIGINT)" +
         s" FROM ($hp) hp)"
       }
-      val gxBlock =
-        s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-           |  FROM bins c
-           |  CROSS JOIN (SELECT unnest(range(-15, 16)) AS kk) o
-           |  JOIN bins b2 ON b2.ener = c.ener
-           |    AND b2.b = ((c.b + o.kk) % 200 + 200) % 200
-           |  GROUP BY 1, 2),
-           |best AS (SELECT ener, c, w FROM (
-           |    SELECT ener, c, w,
-           |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-           |    FROM gw) WHERE rw = 1),
-           |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-           |gx AS (SELECT best.ener AS ener,
-           |    (CAST(sa AS DOUBLE) / 200 - CAST(w AS DOUBLE) / 31) / 1e9 AS g0,
-           |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
-           |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
-           |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-           |    ${D(1.05)} AS g2, ${D(1.5e-3)} AS g3, ${D(0.3)} AS g4
-           |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13lFixtureSql, 42L, nW = 50, nSteps = 150,
-                           llqGen = Some(gpLlq),
-                           los = Seq(-0.2, -3.5, 0.2, 2e-4, 0.06),
-                           his = Seq(0.2, 3.5, 2.0, 6e-3, 1.2),
-                           gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'depth', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'rho', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc4
-         |  UNION ALL
-         |  SELECT 'sigma', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc3
-         |) ORDER BY param""".stripMargin
+      val wigVals = t13lWig.map { case (b, v) => s"($b, $v)" }.mkString(", ")
+      val fixture = s"wigt AS (SELECT * FROM (VALUES $wigVals) AS t(wb, wv)),\n" +
+        t13GridSql(boxFlSql(45360000000L), bins = Some(
+          s"""$tbSql    CAST(sv AS DOUBLE) / n / 1e6
+             |      + CAST(wv AS DOUBLE) * CAST(1e-9 AS DOUBLE) AS y,
+             |    CAST(round((CAST(sv AS DOUBLE) / n / 1e6
+             |      + CAST(wv AS DOUBLE) * CAST(1e-9 AS DOUBLE)) * 1e9) AS BIGINT) AS yq
+             |  FROM bnr JOIN wigt ON wigt.wb = bnr.b)""".stripMargin))
+      posteriorSql(mcmcSamplerSql(oneFit, fixture, 42L, nW = 50, nSteps = 150,
+          llqGen = Some(gpLlq),
+          los = Seq(-0.2, -3.5, 0.2, 2e-4, 0.06),
+          his = Seq(0.2, 3.5, 2.0, 6e-3, 1.2),
+          gxBlockSql = Some(windowGxSql(h = 15,
+            rest = s"${D(1.05)} AS g2, ${D(1.5e-3)} AS g3, ${D(0.3)} AS g4"))),
+        t13lDims)
     },
 
+    // t13b: eight fits (one per ener, each with its salted LCG draw and
+    // its depth on the 0.015 + 0.003·ener ramp) through one recursion.
     "t13b_mcmc_perener" ->
       s"""${mcmcSamplerSql("SELECT unnest(range(0, 8)) AS ener",
-                           t13FixtureSql(perEner = true), 42L)}
+             t13GridSql(boxFlSql(PDAY / 2,
+                 "CAST(0.015 AS DOUBLE) + ener * CAST(0.003 AS DOUBLE)"),
+               r = "((i + ener * 7919) % 65536 * 1103515245 + 12345) % 2147483648"), 42L)}
          |SELECT p.ener AS ener,
-         |    max(CASE WHEN q < 0.3 THEN v END) AS depth_p16,
-         |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END) AS depth_p50,
-         |    max(CASE WHEN q > 0.7 THEN v END) AS depth_p84,
+         |    ${pctColsSql("depth")},
          |    max(a) AS acceptance
          |FROM pc0 p JOIN accr ON accr.ener = p.ener
          |GROUP BY 1 ORDER BY 1""".stripMargin,
@@ -2764,46 +2202,19 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
     // bins (window half-width h = round(500·1/7)/2 = 35, width 71 —
     // the same integer arithmetic boxGuessQ runs); llq = the default
     // white-noise box llq at the matched 2-point-bin scale 7.5e11.
-    "t13m_mcmc_ttv" -> {
-      val gxBlock =
-        s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-           |  FROM bins c
-           |  CROSS JOIN (SELECT unnest(range(-35, 36)) AS kk) o
-           |  JOIN bins b2 ON b2.ener = c.ener
-           |    AND b2.b = ((c.b + o.kk) % 500 + 500) % 500
-           |  GROUP BY 1, 2),
-           |best AS (SELECT ener, c, w FROM (
-           |    SELECT ener, c, w,
-           |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-           |    FROM gw) WHERE rw = 1),
-           |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-           |gx AS (SELECT best.ener AS ener,
-           |    (CAST(sa AS DOUBLE) / 500 - CAST(w AS DOUBLE) / 71) / 1e9 AS g0,
-           |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 500 >= 3.5
-           |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 500 - 7.0
-           |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 500 END AS g1,
-           |    CAST(1.0 AS DOUBLE) AS g2
-           |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
-      def mdlT(al: String, p: String) =
-        s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5) < $al.${p}2 / 2" +
-        s" THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END))"
-      val llqT = (al: String, p: String) =>
-        s"(SELECT CAST(-sum(CAST(round((bb.y - ${mdlT(al, p)}) * (bb.y - ${mdlT(al, p)}) * 7.5e11)" +
-        s" AS BIGINT)) AS BIGINT) FROM bins bb WHERE bb.ener = $al.ener)"
+    "t13m_mcmc_ttv" ->
       s"""${mcmcSamplerSql("SELECT unnest(range(1, 5)) AS ener",
                            t13mFixtureSql, 42L,
-                           llqGen = Some(llqT),
-                           gxBlockSql = Some(gxBlock))}
+                           llqGen = Some(boxLlqSql("7.5e11")),
+                           gxBlockSql = Some(windowGxSql(nb = 500, h = 35)))}
          |SELECT p.ener AS tran,
-         |    max(CASE WHEN q < 0.3 THEN v END) AS epoch_p16,
-         |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END) AS epoch_p50,
-         |    max(CASE WHEN q > 0.7 THEN v END) AS epoch_p84,
-         |    (max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END)
+         |    ${pctColsSql("epoch")},
+         |    (${pctSql(1)}
          |      - CAST(1.75 AS DOUBLE)) * CAST(1440 AS DOUBLE) AS oc_min,
          |    max(a) AS acceptance
          |FROM pc1 p JOIN accr ON accr.ener = p.ener
-         |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
+         |GROUP BY 1 ORDER BY 1""".stripMargin,
+
 
     // The oracle recomputes what the kernel DECODES from the real
     // PNG/WAV/AVI payloads, from the same closed-form generation

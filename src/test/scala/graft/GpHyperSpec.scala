@@ -54,18 +54,10 @@ class GpHyperSpec extends SparkSpec {
     (t, y)
   }
 
-  def joint(nSteps: Int): (Array[Array[Double]], Double) = {
+  /** The joint walk on the replica: the fit step t13l ships. */
+  lazy val joint: graft.queries.Advanced.Fit = {
     val (t, y) = fixture
-    val llq = GpHyper.llq(t, y, 7.0) _
-    val yq = y.map(v => roundHalfAway(v * 1e9))
-    val g = Ensemble.boxGuessQ(t, yq, 7.0, DurInj)
-    val guess = Array(g(0), g(1), g(2), 1.5e-3, 0.3)
-    val (samples, acc) = Ensemble.sampleQ(llq,
-      lo = Array(-0.2, -3.5, 0.2, 2e-4, 0.06),
-      hi = Array(0.2, 3.5, 2.0, 6e-3, 1.2),
-      nWalkers = 50, nSteps = nSteps, burnFrac = 0.3, seed = 42L,
-      init = guess, ballFrac = 0.005)
-    (Ensemble.percentiles(samples, Seq(0.16, 0.5, 0.84)), acc)
+    graft.queries.Advanced.t13lFit(t, y)
   }
 
   /** The t13c-style FIXED-hyperparameter GP fit on the SAME fixture:
@@ -87,7 +79,7 @@ class GpHyperSpec extends SparkSpec {
   }
 
   test("joint walk recovers the injected GP hyperparameters") {
-    val (pct, acc) = joint(150)
+    val (pct, acc) = joint
     info(f"acc=$acc%.3f")
     info(f"depth = ${pct(0)(0)}%.5f ${pct(0)(1)}%.5f ${pct(0)(2)}%.5f")
     info(f"epoch = ${pct(1)(0)}%.4f ${pct(1)(1)}%.4f ${pct(1)(2)}%.4f")
@@ -109,7 +101,7 @@ class GpHyperSpec extends SparkSpec {
   }
 
   test("fixed-wrong hyperparameters vs the joint fit") {
-    val (pj, _) = joint(150)
+    val (pj, _) = joint
     val (pf, accF) = fixedWrong(150)
     info(f"fixed acc=$accF%.3f depth = ${pf(0)(0)}%.5f ${pf(0)(1)}%.5f ${pf(0)(2)}%.5f")
     info(f"joint depth = ${pj(0)(0)}%.5f ${pj(0)(1)}%.5f ${pj(0)(2)}%.5f")
@@ -121,6 +113,20 @@ class GpHyperSpec extends SparkSpec {
     // narrower than the joint fit's, which pays for the walked
     // hyperparameters with honest width.
     assert(wF < wJ)
+  }
+
+  test("declared t13l query equals the replica's joint fit bit-for-bit") {
+    // the replica claims the Spark fixture's arithmetic bit-for-bit, so
+    // the declared posterior table is exactly the replica's walk
+    val out = graft.queries.Advanced.queries("t13l_mcmc_gphyper")(spark, sf)
+      .collect().map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      .toMap
+    val (pct, acc) = joint
+    assert(out("acceptance") == Seq(acc, acc, acc))
+    Seq("depth", "epoch", "dur", "sigma", "rho").zipWithIndex.foreach { case (n, j) =>
+      assert(out(n) == pct(j).toSeq, s"$n: declared ${out(n)} vs replica ${pct(j).toSeq}")
+    }
+    assert(out.size == 6)
   }
 
   test("weights chain SQL in Spark bit-equals the Scala mirror") {

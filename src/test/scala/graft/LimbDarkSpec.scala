@@ -181,4 +181,67 @@ class LimbDarkSpec extends SparkSpec {
     assert(math.abs(k - math.sqrt(89.0)) < 0.2, s"K $k")
     assert(out("acceptance") > 0.1 && out("acceptance") < 0.9)
   }
+
+  /** A declared t13 query's posterior table: param -> (p16, p50, p84). */
+  def posterior(q: String): Map[String, (Double, Double, Double)] =
+    graft.queries.Advanced.queries(q)(spark, sf).collect()
+      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+
+  /** The injected t13 box (depth 0.03, epoch 0, dur 1.0) recovered within
+    * the given p50 tolerances, percentiles in order. */
+  def assertBoxRecovered(q: String, depthTol: Double, epochTol: Double,
+      durTol: Double): Unit = {
+    val out = posterior(q)
+    val (_, acc, _) = out("acceptance")
+    info(f"$q acc=$acc%.3f depth=${out("depth")} epoch=${out("epoch")} dur=${out("dur")}")
+    assert(acc > 0.1 && acc < 0.9, s"$q acceptance $acc")
+    assert(math.abs(out("depth")._2 - 0.03) < depthTol, s"$q depth ${out("depth")}")
+    assert(math.abs(out("epoch")._2) < epochTol, s"$q epoch ${out("epoch")}")
+    assert(math.abs(out("dur")._2 - 1.0) < durTol, s"$q dur ${out("dur")}")
+    out.filterNot(_._1 == "acceptance").foreach { case (k, (a, b, c)) =>
+      assert(a <= b && b <= c, s"$q $k percentiles out of order: $a $b $c")
+    }
+  }
+
+  test("declared t13 query recovers the injected box end to end") {
+    // EnsembleSpec's sampleQ-at-t13-volume tolerances
+    assertBoxRecovered("t13_mcmc_fit", 0.003, 0.2, 0.3)
+  }
+
+  test("declared t13c query: the GP-likelihood fit recovers the box through the wiggle") {
+    // EnsembleSpec's t13c fixture-volume tolerances (50x60 GP walk); the
+    // declared fit lands at depth p50 0.0268, p84 0.0274 — below the
+    // injected 0.03
+    assertBoxRecovered("t13c_mcmc_gp", 0.006, 0.1, 0.15)
+  }
+
+  test("declared t13b query: per-ener depths follow the injected 0.015 + 0.003 ener ramp") {
+    val out = graft.queries.Advanced.queries("t13b_mcmc_perener")(spark, sf).collect()
+    assert(out.map(_.getLong(0)).toSeq == (0L to 7L))
+    val p50 = out.map(_.getDouble(2))
+    out.foreach { r =>
+      val ener = r.getLong(0)
+      info(f"ener=$ener depth p16/p50/p84 = ${r.getDouble(1)}%.5f ${r.getDouble(2)}%.5f " +
+        f"${r.getDouble(3)}%.5f acc=${r.getDouble(4)}%.3f")
+      assert(math.abs(r.getDouble(2) - (0.015 + 0.003 * ener)) < 0.003, s"ener $ener depth")
+      assert(r.getDouble(1) <= r.getDouble(2) && r.getDouble(2) <= r.getDouble(3))
+      assert(r.getDouble(4) > 0.1 && r.getDouble(4) < 0.9, s"ener $ener acceptance")
+    }
+    assert(p50.sliding(2).forall(w => w(0) < w(1)), s"depth p50 not rising: ${p50.toSeq}")
+  }
+
+  test("declared t13m query equals TtvFitSpec's replica fits bit-for-bit") {
+    // the replica claims the Spark fixture's arithmetic bit-for-bit
+    // (TtvFitSpec asserts what the fits MEAN); here the declared
+    // per-transit rows must be exactly the replica's
+    val out = graft.queries.Advanced.queries("t13m_mcmc_ttv")(spark, sf).collect()
+    assert(out.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L))
+    out.foreach { r =>
+      val k = r.getLong(0).toInt
+      val (pct, acc) = TtvFitSpec.fits(k)
+      val expect = Seq(pct(1)(0), pct(1)(1), pct(1)(2), (pct(1)(1) - 1.75) * 1440.0, acc)
+      val got = (1 to 5).map(r.getDouble)
+      assert(got == expect, s"transit $k: declared $got vs replica $expect")
+    }
+  }
 }

@@ -20,32 +20,14 @@ import graft.expr.VecExprs.roundHalfAway
   *     continuous weighted measurement resolves ~1 min.
   */
 class TtvFitSpec extends AnyFunSuite {
+  import TtvFitSpec._
 
-  val PDAY = 86400000000L; val P7 = 7L * PDAY; val HP = P7 / 2
-  val Step = 604800000L; val N = 4500; val Nb = 500
   val AUs = 3780000000L // 63 min
 
   test("TtvInjUs literals are round(A sin(2 pi k/5))") {
     val expect = (1 to 4).map(k =>
       roundHalfAway(AUs * math.sin(2.0 * math.Pi * k / 5)))
     assert(graft.queries.Advanced.TtvInjUs == expect)
-  }
-
-  /** The fixture rows, closed form from i (t0 cancels):
-    * (k, off µs, fc µflux). */
-  lazy val rows: Seq[(Int, Long, Long)] = (0 until N).flatMap { i =>
-    val tl = i.toLong * Step
-    val k = ((tl + HP) / P7).toInt
-    if (k < 1 || k > 4) None
-    else {
-      val off = tl - k * P7
-      val r = (i % 65536L * 1103515245L + 12345L) % 2147483648L
-      val noise = (r.toDouble / 2147483648.0 - 0.5) * 0.004
-      val dip =
-        if (math.abs(off - graft.queries.Advanced.TtvInjUs(k - 1)) < PDAY / 2)
-          0.03 else 0.0
-      Some((k, off, roundHalfAway((1.0 - dip + noise) * 1e6)))
-    }
   }
 
   /** t21's measurement on this fixture: baseline mean from samples
@@ -77,25 +59,10 @@ class TtvFitSpec extends AnyFunSuite {
     }
   }
 
-  /** The declared query's per-transit fit, replicated driver-side. */
-  lazy val fittedOcMin: Map[Int, Double] = (1 to 4).map { k =>
-    val binned = rows.filter(_._1 == k)
-      .groupBy { case (_, off, _) => ((off + P7 + P7 / 4) % P7) * Nb / P7 }
-      .toSeq.sortBy(_._1)
-    val t = binned.map { case (b, _) => (b.toDouble + 0.5) * 7.0 / Nb }.toArray
-    val y = binned.map { case (_, rs) =>
-      rs.map(_._3).sum.toDouble / rs.size / 1e6 }.toArray
-    val llq = graft.model.Ensemble.boxLlq(t, y, scale = 7.5e11, period = 7.0) _
-    val yq = y.map(v => roundHalfAway(v * 1e9))
-    val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-    val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-      lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-      nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L + k,
-      init = guess, ballFrac = 0.005)
+  lazy val fittedOcMin: Map[Int, Double] = fits.map { case (k, (pct, acc)) =>
     assert(acc > 0.1 && acc < 0.9, s"k=$k acceptance $acc out of band")
-    val pct = graft.model.Ensemble.percentiles(samples)
     k -> (pct(1)(1) - 1.75) * 1440.0
-  }.toMap
+  }
 
   test("per-transit MCMC epoch fits recover the injection within a bin") {
     val binMin = 7.0 * 1440 / Nb // 20.16
@@ -116,4 +83,40 @@ class TtvFitSpec extends AnyFunSuite {
       assert(math.abs(fittedOcMin(k) - measuredOcMin(k)) < binMin,
         s"k=$k fit ${fittedOcMin(k)} vs measured ${measuredOcMin(k)}")
   }
+}
+
+/** The t13m fixture replica, shared with LimbDarkSpec's declared-query
+  * parity test. */
+object TtvFitSpec {
+  val PDAY = 86400000000L; val P7 = 7L * PDAY; val HP = P7 / 2
+  val Step = 604800000L; val N = 4500; val Nb = 500
+
+  /** The fixture rows, closed form from i (t0 cancels):
+    * (k, off µs, fc µflux). */
+  lazy val rows: Seq[(Int, Long, Long)] = (0 until N).flatMap { i =>
+    val tl = i.toLong * Step
+    val k = ((tl + HP) / P7).toInt
+    if (k < 1 || k > 4) None
+    else {
+      val off = tl - k * P7
+      val r = (i % 65536L * 1103515245L + 12345L) % 2147483648L
+      val noise = (r.toDouble / 2147483648.0 - 0.5) * 0.004
+      val dip =
+        if (math.abs(off - graft.queries.Advanced.TtvInjUs(k - 1)) < PDAY / 2)
+          0.03 else 0.0
+      Some((k, off, roundHalfAway((1.0 - dip + noise) * 1e6)))
+    }
+  }
+
+  /** The declared query's per-transit fit on the replica: each
+    * transit's 500 bins through the shipped Advanced.boxFit. */
+  lazy val fits: Map[Int, graft.queries.Advanced.Fit] = (1 to 4).map { k =>
+    val binned = rows.filter(_._1 == k)
+      .groupBy { case (_, off, _) => ((off + P7 + P7 / 4) % P7) * Nb / P7 }
+      .toSeq.sortBy(_._1)
+    val t = binned.map { case (b, _) => (b.toDouble + 0.5) * 7.0 / Nb }.toArray
+    val y = binned.map { case (_, rs) =>
+      rs.map(_._3).sum.toDouble / rs.size / 1e6 }.toArray
+    k -> graft.queries.Advanced.boxFit(t, y, scale = 7.5e11, seed = 42L + k)
+  }.toMap
 }
